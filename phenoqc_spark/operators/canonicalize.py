@@ -6,7 +6,7 @@ generalizes to transitive same-as closure over alt/xref/custom-mapping
 edges: connected components computed with the alternating large-star /
 small-star algorithm (Kiveris et al., "Connected Components in MapReduce
 and Beyond", SoCC'14) — pure DataFrame joins/aggregations, converging in
-O(log² n) rounds, with ``localCheckpoint`` each round to truncate lineage.
+O(log² n) rounds.
 
 Component label = min(node id) lexicographically; the canonical id of a
 component is then chosen as the primary-preferred member (see
@@ -15,7 +15,53 @@ component is then chosen as the primary-preferred member (see
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+import itertools
+import warnings
+from functools import reduce
+
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+
+
+def _iterate(name: str, step, state, max_rounds: "int | None", converge: bool = True):
+    """Drive one iterative operator; every loop in this module runs here.
+
+    ``step(state, i, checkpoint)`` plans round ``i`` (1-based) and returns
+    ``(state, delta)``; ``max_rounds=None`` leaves the loop unbounded, for
+    loops that shrink their input every round.  A fixpoint is not one
+    Catalyst plan, so each frame a round hands to the next goes through
+    ``checkpoint`` (``localCheckpoint``); without it every round would
+    re-plan and re-run all the rounds before it.
+
+    - Convergence loop (``converge=True``): ``delta`` holds the round's
+      changed or new rows.  The checkpoint is lazy and the round's single
+      action is the full ``count()`` of ``delta``, which also materializes
+      it, so a round is one action.  The count is a full one, not
+      ``limit(1)``: a limited count escalates over partitions in several
+      jobs and leaves a lazy checkpoint partly filled.  The loop stops at
+      the first round whose count is 0.
+    - Fixed-round loop (``converge=False``): there is no count, so the
+      checkpoint is eager and ``delta`` is ignored.
+
+    Each round's jobs carry ``spark.job.description = "<name> round <i>"``;
+    the caller's description is restored afterwards.  Job groups are left
+    to the caller.  Returns ``(state, rounds, converged)``.
+    """
+    sc = SparkSession.active().sparkContext
+    outer = sc.getLocalProperty("spark.job.description")
+
+    def checkpoint(df: DataFrame) -> DataFrame:
+        return df.localCheckpoint(eager=not converge)
+
+    try:
+        rounds = itertools.count(1) if max_rounds is None else range(1, max_rounds + 1)
+        for i in rounds:
+            sc.setLocalProperty("spark.job.description", f"{name} round {i}")
+            state, delta = step(state, i, checkpoint)
+            if converge and delta.count() == 0:
+                return state, i, True
+        return state, max(max_rounds, 0), not converge
+    finally:
+        sc.setLocalProperty("spark.job.description", outer)
 
 
 def connected_components(
@@ -23,16 +69,14 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """(node, component) with component = min member id of the node's CC.
 
     Implementation: min-label propagation expressed as alternating
     large-star/small-star operations on the edge list.  Each round is two
-    shuffles (groupBy min + join); lineage is truncated via
-    localCheckpoint so the iterative plan doesn't blow up the optimizer —
-    the driver-side loop is inherent (fixpoints are not a single Catalyst
-    plan, SURVEY.md §4.2).
+    shuffles (groupBy min + join) and ends in one count of the changed
+    labels.  At ``max_iter`` it warns (``RuntimeWarning``) and returns the
+    labels it has, which may split a component.
     """
     # undirected: keep each edge both ways, self-loops dropped.  One
     # distinct over the symmetric union suffices — a pre-distinct on the
@@ -42,10 +86,9 @@ def connected_components(
         F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b"))
     )
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    # Persist the symmetric edge list: every iteration joins against it, and
-    # without the persist each round would re-execute the FULL upstream
-    # lineage (for minhash_near_dedup that is the whole LSH+verify pipeline
-    # — measured 4× the total wall-clock on a 1M-doc dedup).
+    # every round joins against the edge list; without the persist each
+    # round would re-run the full upstream lineage (for minhash_near_dedup
+    # that is the whole LSH + verify pipeline)
     sym = sym.persist()
     # labels: start with each node's min neighbor (or itself)
     labels = (
@@ -53,7 +96,8 @@ def connected_components(
         .agg(F.min("b").alias("nbr_min"))
         .select("node", F.least("node", "nbr_min").alias("comp"))
     )
-    for i in range(max_iter):
+
+    def round_(labels, i, checkpoint):
         # propagate: node's comp = min(own comp, neighbors' comps)
         nbr = (
             sym.join(labels.withColumnRenamed("node", "b2"), sym.b == F.col("b2"))
@@ -61,10 +105,8 @@ def connected_components(
             .agg(F.min("comp").alias("nbr_comp"))
             .withColumnRenamed("a", "node")
         )
-        # carry the pre-iteration comp through the round so convergence is
-        # a filter over the checkpointed result — the previous shape
-        # re-joined the new labels against the old (one extra shuffle join
-        # + job per round) for the same answer
+        # carry the pre-round comp as _old so convergence is a filter over
+        # the round's own frame, not a join of new labels against old
         new_labels = (
             labels.join(nbr, "node", "left")
             .select(
@@ -76,7 +118,7 @@ def connected_components(
             )
         )
         # pointer-jumping: comp = comp's comp (halves chain depth per round)
-        jumped = (
+        jumped = checkpoint(
             new_labels.alias("l")
             .join(
                 new_labels.select(
@@ -93,27 +135,15 @@ def connected_components(
                 F.col("l._old").alias("_old"),
             )
         )
-        if checkpoint_every and (i % checkpoint_every == 0):
-            # LAZY checkpoint: the convergence count below is the action
-            # that materializes it, so each round costs ONE driver job
-            # instead of two (eager-materialize, then a count that re-read
-            # the checkpointed blocks).  A full count (not limit(1)) keeps
-            # it one job: a limited count runs Spark's incremental
-            # partition-escalation jobs and, under a lazy checkpoint,
-            # leaves missing partitions for a fill-in job.  Eager's only
-            # advantage — accurate size stats for broadcast planning — is
-            # moot: labels is node-sized and never broadcast at graph
-            # scale.  Measured result-identical and time-neutral at both
-            # ends (bench star graph ~1.0-1.2 s warm either way; 4M-edge
-            # 16-round graph 67-77 s either way): the second job's read
-            # was cheap cached I/O, so this buys only the per-round job
-            # launch — kept because it is strictly less scheduling work
-            # for the same answer, not as a measured speedup.
-            jumped = jumped.localCheckpoint(eager=False)
-        changed = jumped.filter(F.col("comp") != F.col("_old")).count()
-        labels = jumped.select("node", "comp")
-        if changed == 0:
-            break
+        return jumped, jumped.filter(F.col("comp") != F.col("_old"))
+
+    labels, _, converged = _iterate("connected_components", round_, labels, max_iter)
+    if not converged:
+        warnings.warn(
+            f"connected_components: not converged after {max_iter} rounds",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     # labels are localCheckpoint-ed (materialized) — safe to free the edges
     sym.unpersist()
     return labels.select("node", F.col("comp").alias("component"))
@@ -278,7 +308,6 @@ def pagerank(
     dst: str = "dst",
     iters: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 1,
     weight: "str | None" = None,
     seeds: "list | None" = None,
     init_ranks: "DataFrame | None" = None,
@@ -290,19 +319,11 @@ def pagerank(
     Standard formulation: each round every node sends rank/out_degree
     along its out-edges; dangling (sink) mass and the teleport term are
     redistributed uniformly, so Σrank = 1 is invariant.  Per round: one
-    join against the persisted (edge, out_degree) list + one groupBy sum —
-    the same two-shuffle round shape as :func:`connected_components`, with
-    ``localCheckpoint`` truncating the iterative lineage.  The per-round
-    dangling-mass scalar is a driver-side aggregate (one double), like the
-    CC convergence check.  Deterministic for a fixed ``iters``.
-
-    ``checkpoint_every=1`` (the default) eagerly materializes every
-    round's ranks: each round is consumed by TWO actions (the next
-    round's dangling collect and its contribs join), so any
-    un-checkpointed round executes its join+agg twice.  Measured on the
-    1M-page triple graph (6.8M edges, 979k nodes, local[32], 10 iters):
-    45.8 s at every-2 vs 25.6 s at every-1 — the node-sized materialize
-    is far cheaper than recomputing the edge-sized join.
+    join against the persisted (edge, out_degree) list + one groupBy sum,
+    plus the dangling mass as a driver-side scalar (one double).  Each
+    round's ranks feed two actions (the next round's dangling collect and
+    its contribs join), so they are materialized once per round rather
+    than recomputed twice.  Deterministic for a fixed ``iters``.
 
     ``weight`` names an edge-weight column (e.g. the triple confidence
     score): contributions become rank·w/Σw(out), parallel edges collapse
@@ -407,7 +428,8 @@ def pagerank(
     dangling_nodes = nodes.join(
         out_deg.withColumnRenamed("a", "node"), "node", "left_anti"
     ).persist()
-    for i in range(iters):
+
+    def round_(ranks, i, checkpoint):
         contribs = (
             links.join(ranks.withColumnRenamed("node", "a"), "a")
             .select(
@@ -437,8 +459,9 @@ def pagerank(
                     "rank"
                 ),
             )
-        if checkpoint_every and (i % checkpoint_every == 0):
-            ranks = ranks.localCheckpoint(eager=True)
+        return checkpoint(ranks), None
+
+    ranks, _, _ = _iterate("pagerank", round_, ranks, iters, converge=False)
     links.unpersist()
     dangling_nodes.unpersist()
     if base_nodes is not None:
@@ -459,10 +482,9 @@ def hits(
     versa).  Mutual power iteration with L2 normalization each half-step:
     ``auth = Aᵀ·hub / ‖·‖₂`` then ``hub = A·auth / ‖·‖₂``.
 
-    Round shape: per half-step one join of the persisted edge list
-    against the node-sized score frame + one groupBy sum, then a
-    driver-side scalar for the norm (the same bounded-collect tier as
-    PageRank's dangling mass); ``localCheckpoint`` per iteration.  Nodes
+    Per half-step: one join of the persisted edge list against the
+    node-sized score frame + one groupBy sum, then the norm as a
+    driver-side scalar (like PageRank's dangling mass).  Nodes
     with no out-edges have hub 0, no in-edges authority 0 — both still
     appear.  Deterministic for fixed ``iters`` up to float summation
     order (oracle rounds to 6 dp, ~1e8× the divergence)."""
@@ -481,9 +503,9 @@ def hits(
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("hub", F.lit(0.0)).withColumn("authority", F.lit(0.0))
-    hub = nodes.select("node", F.lit(1.0).alias("h"))
-    auth = None
-    for _ in range(iters):
+
+    def round_(st, i, checkpoint):
+        hub, _ = st
         raw_a = (
             e.join(hub.withColumnRenamed("node", "a").withColumnRenamed("h", "_s"), "a")
             .groupBy(F.col("b").alias("node"))
@@ -503,9 +525,11 @@ def hits(
             "node", F.coalesce("s", F.lit(0.0)).alias("h")
         )
         norm_h = float(hub.agg(F.sqrt(F.sum(F.col("h") * F.col("h")))).collect()[0][0])
-        hub = hub.select("node", (F.col("h") / F.lit(norm_h)).alias("h")).localCheckpoint(
-            eager=True
-        )
+        hub = hub.select("node", (F.col("h") / F.lit(norm_h)).alias("h"))
+        return (checkpoint(hub), auth), None
+
+    hub = nodes.select("node", F.lit(1.0).alias("h"))
+    (hub, auth), _, _ = _iterate("hits", round_, (hub, None), iters, converge=False)
     out = hub.join(auth.withColumnRenamed("x", "authority"), "node").select(
         "node", F.col("h").alias("hub"), "authority"
     )
@@ -527,22 +551,16 @@ def coreness(
     peel-layer pruning of weakly-attached entities before canonical-id
     election).
 
-    Distributed peeling: phase k repeatedly removes every still-alive
-    node whose remaining degree is ≤ k (including nodes isolated by
-    earlier removals in the same phase) and assigns it coreness k; when
-    a sweep removes nothing, k advances.  The k-core is unique, so the
-    result is deterministic regardless of execution order.  Each sweep
-    is one degree aggregate over the remaining symmetric edge list + two
-    anti-joins — the :func:`connected_components` round shape, with
-    ``localCheckpoint`` truncating lineage per sweep and ONE driver
-    action per sweep (the peeled-count, which also advances the
-    remaining-alive counter arithmetically — no separate emptiness
-    probe).  Total sweeps are bounded by degeneracy + number of distinct
-    core levels, both tiny for web-KG graphs (hub-heavy ⇒ shallow peel
-    depth); measured 1M hub-skewed edges / 392k nodes / max core 6 in
-    ~90 s on local[32] (~30 sweeps at a ~3 s/sweep scheduling +
-    checkpoint floor — the edge set shrinks as phases peel, so sweep
-    cost falls off after the bulk layers; BENCH/DEDUP.md).
+    Distributed peeling: each sweep removes every still-alive node whose
+    remaining degree is ≤ k (including nodes isolated by earlier removals)
+    and assigns it coreness k.  k starts at 0 and, once no alive node has
+    degree ≤ k, rises to the lowest remaining degree — the level at which
+    a one-step-at-a-time k would next peel.  The k-core is unique, so the
+    result is deterministic regardless of execution order.  Each sweep is
+    one degree aggregate over the remaining symmetric edge list, a 1-row
+    broadcast of the peel level and two semi-joins; it ends when no node
+    is left, and raises after ``max_rounds`` sweeps.  The sweep count is
+    the graph's peel depth, shallow on hub-heavy web-KG graphs.
     Reference analogue: none (graph materialize extra)."""
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -551,41 +569,40 @@ def coreness(
     )
     rem = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     rem = rem.localCheckpoint(eager=True)
-    alive = rem.select(F.col("a").alias("node")).distinct().localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    out = spark.createDataFrame([], "node string, coreness long") if dict(
-        edges.dtypes
-    )[src] == "string" else spark.createDataFrame([], f"node {dict(edges.dtypes)[src]}, coreness long")
-    n_alive = alive.count()
-    k = 0
-    for _ in range(max_rounds):
-        if n_alive == 0:
-            break
-        # alive nodes with remaining degree > k keep living; everything
-        # else (degree ≤ k, or 0 via isolation) peels at this k
-        high = (
-            rem.groupBy("a")
-            .agg(F.count(F.lit(1)).alias("_d"))
-            .filter(F.col("_d") > k)
-            .select(F.col("a").alias("node"))
+    # every alive node carries the current peel level k
+    alive = rem.select(F.col("a").alias("node")).distinct().withColumn(
+        "_k", F.lit(0).cast("long")
+    )
+    out = edges.sparkSession.createDataFrame(
+        [], f"node {dict(edges.dtypes)[src]}, coreness long"
+    )
+
+    def sweep(st, i, checkpoint):
+        alive, rem, out = st
+        deg = rem.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("_d"))
+        cur = alive.join(deg, "node", "left").select(
+            "node", "_k", F.coalesce("_d", F.lit(0)).alias("_d")
         )
-        low = alive.join(high, "node", "left_anti").localCheckpoint(eager=True)
-        n_low = low.count()  # the sweep's single driver action
-        if n_low == 0:
-            k += 1
-            continue
-        n_alive -= n_low
-        # no checkpoint on `out`: its lineage is a flat union of already
-        # checkpointed `low` leaves, so it stays shallow by construction
-        out = out.union(low.select("node", F.lit(k).cast("long").alias("coreness")))
-        alive = alive.join(low, "node", "left_anti").localCheckpoint(eager=True)
-        rem = (
-            rem.join(low.withColumnRenamed("node", "a"), "a", "left_anti")
-            .join(low.withColumnRenamed("node", "b"), "b", "left_anti")
+        level = cur.agg(F.greatest(F.max("_k"), F.min("_d")).alias("_lvl"))
+        tagged = checkpoint(
+            cur.crossJoin(F.broadcast(level)).select(
+                "node",
+                F.col("_lvl").alias("_k"),
+                (F.col("_d") <= F.col("_lvl")).alias("_peel"),
+            )
+        )
+        peeled = tagged.filter(F.col("_peel"))
+        alive = tagged.filter(~F.col("_peel")).select("node", "_k")
+        rem = checkpoint(
+            rem.join(alive.select(F.col("node").alias("a")), "a", "left_semi")
+            .join(alive.select(F.col("node").alias("b")), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
-    else:
+        out = out.union(peeled.select("node", F.col("_k").alias("coreness")))
+        return (alive, rem, out), peeled
+
+    (_, _, out), _, converged = _iterate("coreness", sweep, (alive, rem, out), max_rounds)
+    if not converged:
         raise RuntimeError(f"coreness: did not converge in {max_rounds} sweeps")
     return out
 
@@ -606,8 +623,7 @@ def bfs_distances(
     Level-synchronous frontier expansion: each round joins the current
     frontier against the symmetric edge list, anti-joins already-visited
     nodes, and appends the new level — one join + one anti-join per
-    level, ``localCheckpoint`` per round (the
-    :func:`connected_components` lineage discipline).  Rounds = graph
+    level, ending in one count of the new level.  Rounds = graph
     diameter from the seed set, which is small on hub-heavy KGs (hubs
     compress distances).  Deterministic: BFS level sets are unique.
 
@@ -623,21 +639,21 @@ def bfs_distances(
     rem = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     rem = rem.localCheckpoint(eager=True)
     visited = sources.select("node").distinct().localCheckpoint(eager=True)
-    frontier = visited
     out = visited.select("node", F.lit(0).cast("long").alias("distance"))
-    for d in range(1, max_depth + 1):
-        nxt = (
+
+    def level(st, d, checkpoint):
+        visited, frontier, out = st
+        nxt = checkpoint(
             rem.join(frontier.withColumnRenamed("node", "a"), "a")
             .select(F.col("b").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if nxt.limit(1).count() == 0:
-            break
+        # visited and out stay flat unions of checkpointed levels
         out = out.union(nxt.select("node", F.lit(d).cast("long").alias("distance")))
-        visited = visited.union(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+        return (visited.union(nxt), nxt, out), nxt
+
+    (_, _, out), _, _ = _iterate("bfs_distances", level, (visited, visited, out), max_depth)
     return out
 
 
@@ -680,10 +696,10 @@ def strongly_connected_components(
     frontier-bound family as :func:`bfs_distances`; no O(log n)
     single-plan SCC exists short of FW-BW divide-and-conquer, which
     recurses on driver-side subproblem lists and loses determinism of
-    output order for no benefit at KG cycle sizes).  All per-round state
-    (active edges, labels) is localCheckpoint-ed; assignments accumulate
-    as materialized per-round frames and union at the end.  Deterministic
-    for any ``max_rounds`` high enough to converge (raises if not).
+    output order for no benefit at KG cycle sizes).  Assignments
+    accumulate as per-round frames and union at the end.  Deterministic
+    for any ``max_rounds`` / ``max_fixpoint_iters`` high enough to
+    converge (raises if not).
     """
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -697,108 +713,81 @@ def strongly_connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    done: list[DataFrame] = []
-    for _round in range(max_rounds):
-        if nodes.limit(1).count() == 0:
-            break
-        # 1. trim: in-degree-0 or out-degree-0 nodes are singleton SCCs
-        while True:
-            srcs = e.select(F.col("a").alias("node")).distinct()
-            dsts = e.select(F.col("b").alias("node")).distinct()
-            inner = srcs.join(dsts, "node")  # has both in- and out-edges
-            trimmed = nodes.join(inner, "node", "left_anti")
-            n_trim = trimmed.limit(1).count()
-            if n_trim == 0:
-                break
-            done.append(
-                trimmed.select(
-                    "node", F.col("node").alias("scc_id")
-                ).localCheckpoint(eager=True)
-            )
-            nodes = nodes.join(trimmed, "node", "left_anti").localCheckpoint(eager=True)
-            e = (
-                e.join(nodes.withColumnRenamed("node", "a"), "a", "left_semi")
-                .join(nodes.withColumnRenamed("node", "b"), "b", "left_semi")
-                .select("a", "b")
-                .localCheckpoint(eager=True)
-            )
-        if nodes.limit(1).count() == 0:
-            break
-        # 2. forward coloring to fixpoint: color(v) = max id reaching v
-        colors = nodes.select("node", F.col("node").alias("color"))
-        for _ in range(max_fixpoint_iters):
+
+    def drop(nodes, e, gone, checkpoint):
+        nodes = checkpoint(nodes.join(gone, "node", "left_anti"))
+        e = checkpoint(
+            e.join(nodes.withColumnRenamed("node", "a"), "a", "left_semi")
+            .join(nodes.withColumnRenamed("node", "b"), "b", "left_semi")
+            .select("a", "b")
+        )
+        return nodes, e
+
+    def trim(st, j, checkpoint):
+        # in-degree-0 or out-degree-0 nodes are singleton SCCs
+        nodes, e, done = st
+        srcs = e.select(F.col("a").alias("node")).distinct()
+        dsts = e.select(F.col("b").alias("node")).distinct()
+        trimmed = checkpoint(nodes.join(srcs.join(dsts, "node"), "node", "left_anti"))
+        done = done + [trimmed.select("node", F.col("node").alias("scc_id"))]
+        return (*drop(nodes, e, trimmed, checkpoint), done), trimmed
+
+    def round_(st, i, checkpoint):
+        # unbounded: every round but the last removes at least one node
+        (nodes, e, done), _, _ = _iterate("scc trim", trim, st, None)
+
+        # forward coloring to fixpoint: color(v) = max id reaching v
+        def color(colors, j, checkpoint):
             nbr = (
                 e.join(colors.withColumnRenamed("node", "a"), "a")
                 .groupBy(F.col("b").alias("node"))
                 .agg(F.max("color").alias("in_max"))
             )
-            new_colors = (
-                colors.join(nbr, "node", "left")
-                .select(
+            colors = checkpoint(
+                colors.join(nbr, "node", "left").select(
                     "node",
                     F.greatest(
                         F.col("color"), F.coalesce(F.col("in_max"), F.col("color"))
                     ).alias("color"),
+                    F.col("color").alias("_old"),
                 )
-                .localCheckpoint(eager=True)
             )
-            changed = (
-                new_colors.alias("n")
-                .join(colors.alias("o"), F.col("n.node") == F.col("o.node"))
-                .filter(F.col("n.color") != F.col("o.color"))
-                .limit(1)
-                .count()
-            )
-            colors = new_colors
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"scc: coloring did not converge in {max_fixpoint_iters} iters"
-            )
-        # 3. backward confirmation: reach the root along same-color edges
-        reached = colors.filter(F.col("node") == F.col("color")).select(
-            "node", "color"
-        ).localCheckpoint(eager=True)
-        frontier = reached
-        for _ in range(max_fixpoint_iters):
+            return colors, colors.filter(F.col("color") != F.col("_old"))
+
+        colors = nodes.select("node", F.col("node").alias("color"))
+        colors, _, ok = _iterate("scc color", color, colors, max_fixpoint_iters)
+        if not ok:
+            raise RuntimeError(f"scc: coloring did not converge in {max_fixpoint_iters} iters")
+
+        # backward confirmation: reach the root along same-color edges
+        def confirm(st, j, checkpoint):
+            reached, frontier = st
             # predecessors u of a reached node w, same color, not yet reached
-            preds = (
+            preds = checkpoint(
                 e.join(frontier.withColumnRenamed("node", "b"), "b")
                 .select(F.col("a").alias("node"), "color")
                 .distinct()
-                .join(
-                    colors.withColumnRenamed("color", "ucolor"), "node"
-                )
+                .join(colors.select("node", F.col("color").alias("ucolor")), "node")
                 .filter(F.col("color") == F.col("ucolor"))
                 .select("node", "color")
                 .join(reached, "node", "left_anti")
-                .localCheckpoint(eager=True)
             )
-            if preds.limit(1).count() == 0:
-                break
-            reached = reached.union(preds).localCheckpoint(eager=True)
-            frontier = preds
-        done.append(
-            reached.select("node", F.col("color").alias("scc_id")).localCheckpoint(
-                eager=True
+            return (reached.union(preds), preds), preds
+
+        roots = colors.filter(F.col("node") == F.col("color")).select("node", "color")
+        (reached, _), _, ok = _iterate("scc confirm", confirm, (roots, roots), max_fixpoint_iters)
+        if not ok:
+            raise RuntimeError(
+                f"scc: confirmation did not converge in {max_fixpoint_iters} iters"
             )
-        )
-        nodes = nodes.join(reached, "node", "left_anti").localCheckpoint(eager=True)
-        e = (
-            e.join(nodes.withColumnRenamed("node", "a"), "a", "left_semi")
-            .join(nodes.withColumnRenamed("node", "b"), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
-    else:
+        done = done + [reached.select("node", F.col("color").alias("scc_id"))]
+        nodes, e = drop(nodes, e, reached, checkpoint)
+        return (nodes, e, done), nodes
+
+    (_, _, done), _, converged = _iterate("scc", round_, (nodes, e, []), max_rounds)
+    if not converged:
         raise RuntimeError(f"scc: did not converge in {max_rounds} rounds")
-    if not done:
-        return nodes.select("node", F.col("node").alias("scc_id"))
-    out = done[0]
-    for d in done[1:]:
-        out = out.union(d)
-    return out
+    return reduce(DataFrame.union, done)
 
 
 def _omega(col, t: int, r: int):
@@ -918,7 +907,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     iters: int = 5,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """(node, label): community detection by synchronous label
     propagation over the undirected simple graph — groups densely
@@ -938,9 +926,7 @@ def label_propagation(
     join as :func:`pagerank`) + one vote count groupBy on (node, label)
     + one per-node argmax via ``min_by(label, struct(-cnt, label))``
     (max count, then min label — one aggregate, no window sort).  All
-    three map-side combine; ``localCheckpoint`` truncates the iterative
-    lineage per round, the :func:`connected_components` discipline.  Hub
-    skew: a hub's votes partial-aggregate map-side on (node, label), so
+    three map-side combine.  Hub skew: a hub's votes partial-aggregate map-side on (node, label), so
     a million-degree node shuffles one row per distinct neighbor label
     per map partition, not per edge.  Reference analogue: none (graph
     materialize extra)."""
@@ -953,7 +939,8 @@ def label_propagation(
     labels = sym.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    for i in range(iters):
+
+    def round_(labels, i, checkpoint):
         votes = (
             sym.join(labels.select(F.col("node").alias("b"), "label"), "b")
             .groupBy("a", "label")
@@ -964,8 +951,9 @@ def label_propagation(
                 "label"
             )
         ).select(F.col("a").alias("node"), "label")
-        if checkpoint_every and (i % checkpoint_every == 0):
-            labels = labels.localCheckpoint(eager=True)
+        return checkpoint(labels), None
+
+    labels, _, _ = _iterate("label_propagation", round_, labels, iters, converge=False)
     return labels
 
 
@@ -994,9 +982,7 @@ def random_walks(
     a per-node window; a hub's neighbor list sorts inside one task,
     the one-time cost any adjacency layout pays).  Per step: one join
     against the degree table (to size the modulus) + one equi-join on
-    (node, idx) against the indexed adjacency, ``localCheckpoint`` per
-    step (the :func:`connected_components` lineage discipline).  The
-    symmetrized simple graph has no dead ends, so every walk runs full
+    (node, idx) against the indexed adjacency.  The symmetrized simple graph has no dead ends, so every walk runs full
     length.  Output is one row per visited position, step 0 = start."""
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -1017,9 +1003,9 @@ def random_walks(
             F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("walk"),
         )
     )
-    walks = starts.select("start", "walk", F.col("start").alias("node"))
-    out = walks.select("start", "walk", F.lit(0).alias("step"), "node")
-    for step in range(1, walk_length + 1):
+
+    def round_(st, step, checkpoint):
+        walks, out = st
         hashed = walks.join(deg, walks.node == deg.a).select(
             "start",
             "walk",
@@ -1046,14 +1032,18 @@ def random_walks(
             ).alias("idx"),
             F.col("node"),
         )
-        walks = (
+        walks = checkpoint(
             hashed.join(adj, (hashed.node == adj.a) & (hashed.idx == adj.idx))
             .select("start", "walk", F.col("b").alias("node"))
-            .localCheckpoint(eager=True)
         )
         out = out.unionByName(
             walks.select("start", "walk", F.lit(step).alias("step"), "node")
         )
+        return (walks, out), None
+
+    walks = starts.select("start", "walk", F.col("start").alias("node"))
+    out = walks.select("start", "walk", F.lit(0).alias("step"), "node")
+    (_, out), _, _ = _iterate("random_walks", round_, (walks, out), walk_length, converge=False)
     return out
 
 
@@ -1085,7 +1075,7 @@ def node2vec_walks(
     FULL candidate set (degree-sized — inherent to second-order biasing,
     which must score every neighbor), one left join against the edge set
     flags common neighbors of (prev, cur), and a per-walker running-sum
-    window picks the winner; ``localCheckpoint`` per step.  Single-node
+    window picks the winner.  Single-node
     node2vec pays the same per-walker degree cost plus an O(V·d²)
     alias-table prebuild this formulation skips.
 
@@ -1115,12 +1105,10 @@ def node2vec_walks(
             F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("walk"),
         )
     )
-    walks = starts.select(
-        "start", "walk", F.lit(None).cast("string").alias("prev"), F.col("start").alias("node")
-    )
-    out = walks.select("start", "walk", F.lit(0).alias("step"), "node")
     denom = float(16**15)
-    for step in range(1, walk_length + 1):
+
+    def round_(st, step, checkpoint):
+        walks, out = st
         u = (
             F.conv(
                 F.substring(
@@ -1174,10 +1162,17 @@ def node2vec_walks(
             )
             .select("start", "walk", F.col("_r.prev").alias("prev"), F.col("_r.cand").alias("node"))
         )
-        walks = picked.localCheckpoint(eager=True)
+        walks = checkpoint(picked)
         out = out.unionByName(
             walks.select("start", "walk", F.lit(step).alias("step"), "node")
         )
+        return (walks, out), None
+
+    walks = starts.select(
+        "start", "walk", F.lit(None).cast("string").alias("prev"), F.col("start").alias("node")
+    )
+    out = walks.select("start", "walk", F.lit(0).alias("step"), "node")
+    (_, out), _, _ = _iterate("node2vec_walks", round_, (walks, out), walk_length, converge=False)
     return out
 
 
@@ -1308,9 +1303,8 @@ def ancestor_closure(
     ancestors, not rows.
 
     Semi-naive iteration: each round extends only the previous round's
-    NEW pairs by one parent hop, anti-joins pairs already known, and
-    ``localCheckpoint``\\ s the delta (the :func:`connected_components`
-    lineage discipline).  Rounds = hierarchy depth — ~16 for HPO-sized
+    NEW pairs by one parent hop and anti-joins pairs already known; it
+    ends in one count of the new pairs.  Rounds = hierarchy depth — ~16 for HPO-sized
     ontologies.  Because BFS discovers each (node, ancestor) pair first
     at its minimum depth, the depth column needs no post-aggregation.
 
@@ -1343,21 +1337,20 @@ def ancestor_closure(
     # parents we append
     hop = e.select(F.col("node").alias("mid"), F.col("ancestor").alias("anc2"))
     out = e.select("node", "ancestor", F.lit(1).cast("int").alias("depth"))
-    delta = out
-    for d in range(2, max_depth + 1):
-        nxt = (
+
+    def extend(st, i, checkpoint):
+        out, delta = st
+        nxt = checkpoint(
             delta.join(hop, delta["ancestor"] == hop["mid"])
             .select("node", F.col("anc2").alias("ancestor"))
             .filter(F.col("node") != F.col("ancestor"))
             .distinct()
             .join(out.select("node", "ancestor"), ["node", "ancestor"], "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if nxt.limit(1).count() == 0:
-            break
-        new = nxt.select("node", "ancestor", F.lit(d).cast("int").alias("depth"))
-        out = out.union(new)
-        delta = new
+        new = nxt.select("node", "ancestor", F.lit(i + 1).cast("int").alias("depth"))
+        return (out.union(new), new), nxt
+
+    (out, _), _, _ = _iterate("ancestor_closure", extend, (out, out), max_depth - 1)
     return out
 
 
@@ -1772,15 +1765,14 @@ def ktruss(
     bounded by the graph's arboricity, not its max degree.  This is the
     difference between feasible and impossible on a real KG edge list —
     a hub entity with 10⁶ id-ordered successors generates ~10¹² wedges
-    under naive a<b orientation (the round-5 1M-page run filled the
-    disk and died exactly there), but near-zero out-wedges under degree
+    under naive a<b orientation, but near-zero out-wedges under degree
     ordering because every hub edge points INTO the hub.  Each triangle
     is found once (its unique (deg, id)-minimum apex), charged to its
     three edges via a 3-way union + hash aggregate; every edge with
     support < k−2 drops and the loop repeats on the survivors until a
-    fixpoint (removals cascade, exactly like the k-core node peel).
-    Degrees are recomputed per round (peeling changes them).  State is
-    localCheckpoint-truncated per round.  Deterministic; raises if
+    fixpoint (removals cascade, exactly like the k-core node peel); each
+    round ends in one count of the dropped edges.  Degrees are recomputed
+    per round (peeling changes them).  Deterministic; raises if
     ``max_rounds`` is exceeded.
     """
     if k < 3:
@@ -1793,7 +1785,8 @@ def ktruss(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
+
+    def peel(und, i, checkpoint):
         # degree-ordered orientation of the surviving edges: lo -> hi by
         # (degree, id); recomputed per round because peeling shifts degrees
         sym = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -1804,10 +1797,13 @@ def ktruss(
         )
         ka = F.struct(F.col("da").alias("d"), F.col("a").alias("n"))
         kb = F.struct(F.col("db").alias("d"), F.col("b").alias("n"))
-        o = ranked.select(
-            F.when(ka < kb, ka).otherwise(kb).alias("s"),
-            F.when(ka < kb, kb).otherwise(ka).alias("t"),
-        ).localCheckpoint(eager=True)
+        # read three times by the triangle plan below
+        o = checkpoint(
+            ranked.select(
+                F.when(ka < kb, ka).otherwise(kb).alias("s"),
+                F.when(ka < kb, kb).otherwise(ka).alias("t"),
+            )
+        )
         w1 = o.select(F.col("s").alias("p"), F.col("t").alias("u"))
         w2 = o.select(F.col("s").alias("p"), F.col("t").alias("v"))
         # wedges at apex p over its (few) out-neighbors, u < v in
@@ -1833,20 +1829,17 @@ def ktruss(
             .groupBy("a", "b")
             .agg(F.count(F.lit(1)).alias("supp"))
         )
-        keep = (
-            und.join(support, ["a", "b"], "left")
-            .filter(F.coalesce(F.col("supp"), F.lit(0)) >= k - 2)
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
-        n_before = und.count()
-        n_after = keep.count()
-        und = keep
-        if n_after == n_before or n_after == 0:
-            return und.select(
-                F.col("a").alias("node_a"), F.col("b").alias("node_b")
+        tagged = checkpoint(
+            und.join(support, ["a", "b"], "left").select(
+                "a", "b", (F.coalesce(F.col("supp"), F.lit(0)) >= k - 2).alias("_keep")
             )
-    raise RuntimeError(f"ktruss: did not converge in {max_rounds} rounds")
+        )
+        return tagged.filter(F.col("_keep")).select("a", "b"), tagged.filter(~F.col("_keep"))
+
+    und, _, converged = _iterate("ktruss", peel, und, max_rounds)
+    if not converged:
+        raise RuntimeError(f"ktruss: did not converge in {max_rounds} rounds")
+    return und.select(F.col("a").alias("node_a"), F.col("b").alias("node_b"))
 
 
 def resolve_redirects(
@@ -1882,9 +1875,8 @@ def resolve_redirects(
     Scale shape: pointer doubling — each round composes the
     partially-resolved map with ITSELF (one self-join keyed on the
     current position), so a length-L chain resolves in ⌈log₂ L⌉ rounds,
-    not L; ``ceil(log2(max_hops))+1`` rounds total, each one shuffle +
-    an eager ``localCheckpoint`` to truncate the iterative lineage (the
-    :func:`connected_components` discipline).  State is one row per
+    not L; at most ``ceil(log2(max_hops))+1`` rounds, each one shuffle
+    ending in one count of the unresolved sources.  State is one row per
     redirect source forever — never per (source × hop) like a naive
     transitive closure.
     """
@@ -1903,14 +1895,15 @@ def resolve_redirects(
         F.lit(False).alias("done"),
     ).localCheckpoint(eager=True)
     rounds = max(1, int(math.ceil(math.log2(max(2, max_hops)))) + 1)
-    for _ in range(rounds):
+
+    def double(state, i, checkpoint):
         jump = state.select(
             F.col("src").alias("j_src"),
             F.col("cur").alias("j_cur"),
             F.col("hops").alias("j_hops"),
         )
         advanced = F.col("j_src").isNotNull() & ~F.col("done")
-        state = (
+        state = checkpoint(
             state.join(jump, state.cur == F.col("j_src"), "left")
             .select(
                 "src",
@@ -1921,10 +1914,11 @@ def resolve_redirects(
                 # a position with no outgoing entry is terminal
                 (F.col("done") | F.col("j_src").isNull()).alias("done"),
             )
-            .localCheckpoint(eager=True)
         )
-        if state.filter(~F.col("done")).limit(1).count() == 0:
-            break
+        return state, state.filter(~F.col("done"))
+
+    # a cycle never resolves, so an unconverged end is the contract, not an error
+    state, _, _ = _iterate("resolve_redirects", double, state, rounds)
     return state.select(
         "src",
         F.when(F.col("done"), F.col("cur")).alias("final_url"),
@@ -1945,9 +1939,8 @@ def cocitation_project(
     RIGHT nodes they share.  This is how a page–page similarity graph is
     built from the page→term triple edges (and a term–term one from the
     transpose): community detection / LPA on the RAW bipartite list just
-    welds everything through the hubs (measured on the 1M-page pipeline
-    graph: 2 "communities" — BENCH/GRAPH.md), while the projection
-    carries the actual co-citation signal.
+    welds everything through the hubs, while the projection carries the
+    actual co-citation signal.
 
     Scale shape: one self-join keyed on the right-hand node + one hash
     aggregate.  A right-hand hub with degree d emits d²/2 pairs — the

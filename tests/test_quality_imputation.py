@@ -357,6 +357,63 @@ def test_chain_components_converge(spark):
     assert cc.select("component").distinct().count() == 1
 
 
+def test_unconverged_components_warn_and_return_labels(spark):
+    edges = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i+1:02d}") for i in range(12)], "src string, dst string"
+    )
+    with pytest.warns(RuntimeWarning, match="not converged after 1 rounds"):
+        cc = connected_components(edges, max_iter=1)
+    assert cc.count() == 13
+    assert cc.select("component").distinct().count() > 1
+
+
+def test_fixpoint_rounds_end_in_one_count_each(spark, monkeypatch):
+    """On a 6-node path every convergence round of bfs_distances,
+    ancestor_closure and coreness ends in exactly one DataFrame.count(),
+    run under the round's job description; the caller's job group and
+    description survive the call."""
+    from phenoqc_spark.operators.canonicalize import (
+        ancestor_closure,
+        bfs_distances,
+        coreness,
+    )
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(5)], "src long, dst long")
+    sources = spark.createDataFrame([(0,)], "node long")
+    sc = spark.sparkContext
+    orig, seen = type(path).count, []
+
+    def count(df):
+        n = orig(df)
+        seen.append((sc.getLocalProperty("spark.job.description"), n))
+        return n
+
+    def rounds(name, counts):
+        return [(f"{name} round {i}", n) for i, n in enumerate(counts, 1)]
+
+    monkeypatch.setattr(type(path), "count", count)
+    sc.setJobGroup("caller", "outer")
+    try:
+        dist = bfs_distances(path, sources)
+        assert seen == rounds("bfs_distances", [1, 1, 1, 1, 1, 0])
+        seen.clear()
+        closure = ancestor_closure(path, child="src", parent="dst")
+        assert seen == rounds("ancestor_closure", [4, 3, 2, 1, 0])
+        seen.clear()
+        core = coreness(path)
+        assert seen == rounds("coreness", [2, 2, 2, 0])
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert {r.node: r.distance for r in dist.collect()} == {i: i for i in range(6)}
+    assert {(r.node, r.ancestor, r.depth) for r in closure.collect()} == {
+        (a, b, b - a) for a in range(6) for b in range(a + 1, 6)
+    }
+    assert {r.node: r.coreness for r in core.collect()} == {i: 1 for i in range(6)}
+
+
 def test_numeric_profile_exact_and_approx(spark):
     """Known 1..100 column (+ nulls): exact percentiles interpolate like
     numpy linear quantile; approx mode lands within sketch error; nulls
