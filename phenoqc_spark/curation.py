@@ -11,10 +11,14 @@ configurable composition of the tested operators.
     context-window chunking
 
 and returns ``(DataFrame, report)`` where ``report`` maps stage name →
-rows surviving it.  With ``count_stages=False`` no intermediate actions
-run — the result is ONE lazy plan and the report contains only the
-configured stage order (the 100 TB mode: counts come from the audit
-table after the single write, not from per-stage jobs).
+rows surviving it.  With ``count_stages=True`` (default) each recorded
+stage is a local checkpoint filled by its own count — one action per
+stage, and the next stage reads those blocks instead of re-running the
+upstream plan.  With ``count_stages=False`` no intermediate actions run —
+the result is ONE lazy plan and the report contains only the configured
+stage order (the 100 TB mode: counts come from the audit table after the
+single write, not from per-stage jobs).  Neither mode leaves a cached
+frame behind for the caller to free.
 
 Every stage is the already-oracle-checked operator; this module adds no
 new semantics, only composition + accounting — the Spark twin of the
@@ -74,26 +78,15 @@ def curate_corpus(
         raise ValueError("choose stratified OR importance sampling, not both")
 
     report: dict[str, int | None] = {}
-    persisted: list[DataFrame] = []
-    lazy_handles: list[DataFrame] = []
 
     def record(stage: str, frame: DataFrame) -> DataFrame:
-        # counted mode: persist each recorded stage so its count does not
-        # re-execute every upstream stage (O(stages²) otherwise); handles
-        # attach to the result for release_intermediates.  Lazy mode
-        # caches nothing — one plan, zero extra jobs.  Either way, harvest
-        # the OPERATOR-INTERNAL persisted handles a stage attaches (e.g.
-        # url_filter's blocklist-hits cache) so they are freed with the
-        # stage instead of leaking executor storage for the session
-        # (ADVICE r5).
-        inner = list(getattr(frame, "_phenoqc_persisted", []) or [])
+        # counted mode: checkpoint each recorded stage so the next stage's
+        # count does not re-execute every upstream stage (O(stages²)
+        # otherwise); the stage's own count fills the checkpoint
         if count_stages:
-            persisted.extend(inner)
-            frame = frame.persist()
-            persisted.append(frame)
+            frame = frame.localCheckpoint(eager=False)
             report[stage] = frame.count()
         else:
-            lazy_handles.extend(inner)
             report[stage] = None
         return frame
 
@@ -221,15 +214,4 @@ def curate_corpus(
             "sharded",
             X.pack_token_shards(out, shard_budget, text_col=text_col, id_col=id_col),
         )
-    if persisted:
-        # free every intermediate except the final frame the caller consumes
-        for p in persisted[:-1]:
-            if p is not out:
-                p.unpersist()
-        out._phenoqc_persisted = [persisted[-1]]  # type: ignore[attr-defined]
-    elif lazy_handles:
-        # lazy mode: nothing was counted, so operator-internal caches are
-        # still live inputs of the single composed plan — hand them to the
-        # caller for release_intermediates after materialization
-        out._phenoqc_persisted = lazy_handles  # type: ignore[attr-defined]
     return out, report

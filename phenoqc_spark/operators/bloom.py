@@ -260,9 +260,9 @@ def dedup_exact_incremental_bloom(
     hashed = new_df.withColumn("_ch", F.md5(F.col(text_col)))
     flagged = bloom_might_contain(hashed, bloom_df, params, "_ch")
     # the probed batch feeds BOTH the sliver branch and the final
-    # anti-join — persist it so the Arrow probe runs once, not per branch
-    # (release via dedup.release_intermediates, as for the LSH ops)
-    flagged = flagged.persist()
+    # anti-join — a lazy local checkpoint (filled by dedup_exact's
+    # drop-list count) so the Arrow probe runs once, not per branch
+    flagged = flagged.localCheckpoint(eager=False)
     # Verify WITHOUT shuffling the state (a sliver-LEFT-ANTI-state join
     # would shuffle the full state — the exact cost the bloom exists to
     # avoid): the sliver's distinct hashes are batch-bounded, so
@@ -282,6 +282,4 @@ def dedup_exact_incremental_bloom(
     batch_new = flagged.join(F.broadcast(confirmed), "_ch", "left_anti").drop(
         "_ch", "might_seen"
     )
-    from .dedup import _register_persisted
-
-    return _register_persisted(dedup_exact(batch_new, text_col, id_col), [flagged])
+    return dedup_exact(batch_new, text_col, id_col)

@@ -225,7 +225,9 @@ def graph_triangles(
     d² pairs.  Plan: one degree aggregate, one map-side orientation, one
     self-join on the wedge pivot, one semi-join against the oriented edge
     set to close each wedge, one count per corner; each triangle is found
-    once and credited to all three corners.
+    once and credited to all three corners.  The oriented edges and the
+    triangle list are each read by several branches, so both are lazy
+    local checkpoints, filled by the first action on the result.
     """
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -241,7 +243,7 @@ def graph_triangles(
         .join(db, "b")
         .filter((F.col("da") < F.col("db")) | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))))
         .select("a", "b")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     # wedges pivoting at a: (a→b, a→c) with b < c in orientation order;
     # closing edge must be the ORIENTED (b,c) (b precedes c by construction)
@@ -251,7 +253,7 @@ def graph_triangles(
     closing = oriented.select(F.col("a").alias("x"), F.col("b").alias("y")).unionByName(
         oriented.select(F.col("b").alias("x"), F.col("a").alias("y"))
     )
-    tris = wedges.join(closing, ["x", "y"], "left_semi").persist()
+    tris = wedges.join(closing, ["x", "y"], "left_semi").localCheckpoint(eager=False)
     counts = (
         tris.select(F.col("p").alias("node"))
         .unionByName(tris.select(F.col("x").alias("node")))
@@ -259,11 +261,9 @@ def graph_triangles(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    out = deg.select(F.col("n").alias("node")).join(counts, "node", "left").select(
+    return deg.select(F.col("n").alias("node")).join(counts, "node", "left").select(
         "node", F.coalesce("n_triangles", F.lit(0)).alias("n_triangles")
     )
-    out._phenoqc_persisted = [oriented, tris]  # type: ignore[attr-defined]
-    return out
 
 
 def clustering_coefficients(

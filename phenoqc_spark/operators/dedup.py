@@ -68,29 +68,6 @@ def _has_min_words(text_col: str, n: int):
 
 
 # ---------------------------------------------------------------------------
-# Cached-intermediate lifecycle
-# ---------------------------------------------------------------------------
-
-def _register_persisted(result: DataFrame, handles: list[DataFrame]) -> DataFrame:
-    """Attach the persisted intermediates to the result so callers can free
-    them once the result is materialized (``release_intermediates``).
-    A long-lived session calling ``*_pairs`` repeatedly would otherwise
-    accumulate cached shingle blocks until executor storage evicts."""
-    result._phenoqc_persisted = handles  # type: ignore[attr-defined]
-    return result
-
-
-def release_intermediates(result: DataFrame) -> None:
-    """Unpersist the cached intermediates attached by a dedup operator.
-
-    Call after the result DataFrame has been collected/written. Safe to call
-    on any DataFrame (no-op when nothing was persisted)."""
-    for h in getattr(result, "_phenoqc_persisted", []) or []:
-        h.unpersist()
-    if hasattr(result, "_phenoqc_persisted"):
-        result._phenoqc_persisted = []  # type: ignore[attr-defined]
-
-# ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
 
@@ -120,11 +97,11 @@ def dedup_exact(
     count — a large corpus fraction in dup-heavy web data — so an
     unconditional broadcast can OOM the driver at the 100 TB design point.
 
-    - ``"auto"`` (default): persist + count the drop list (32 B/row, the
-      count reuses the cache) and broadcast only when it holds ≤
-      ``broadcast_drop_limit`` rows (default 10 M ≈ 80 MB of long ids),
-      else fall back to the shuffled anti-join.  Call
-      :func:`release_intermediates` on the result when done.
+    - ``"auto"`` (default): local-checkpoint the drop list (32 B/row;
+      its count materializes the checkpoint, which the join then reads)
+      and broadcast only when it holds ≤ ``broadcast_drop_limit`` rows
+      (default 10 M ≈ 80 MB of long ids), else fall back to the shuffled
+      anti-join.
     - ``True``: always broadcast (fully lazy, no probe job — the caller
       asserts the dup count is small).
     - ``False``: shuffled anti-join; at the 100 TB tier prefer writing the
@@ -147,15 +124,12 @@ def dedup_exact(
         .filter(F.col("_rn") > 1)
         .select(id_col)
     )
-    handles = []
     if broadcast_drop == "auto":
-        dropped = dropped.persist()
-        handles.append(dropped)
+        dropped = dropped.localCheckpoint(eager=False)
         broadcast_drop = dropped.count() <= broadcast_drop_limit
     if broadcast_drop:
         dropped = F.broadcast(dropped)
-    out = df.join(dropped, id_col, "left_anti")
-    return _register_persisted(out, handles) if handles else out
+    return df.join(dropped, id_col, "left_anti")
 
 
 def exact_duplicate_groups(
@@ -213,7 +187,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persist: bool = True,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) for pairs with shingle-Jaccard ≥ threshold.
@@ -239,12 +212,11 @@ def ngram_jaccard_pairs(
     within-group pairs are exactly 1.0 (and share every shingle, so the
     original join always emitted them for non-empty sets).
 
-    ``persist`` caches the per-doc (set_hash, n_sh) table reused by the
-    group, expansion, and membership branches.  At the 100 TB tier,
-    materialize it to a staging table instead (same plan shape,
-    executor-disk instead of cache).
+    The two tables reused by the pair, expansion and membership branches
+    (per-doc ``members`` and per-set ``groups``) are eager local
+    checkpoints.  At the 100 TB tier, materialize them to a staging table
+    instead (same plan shape, executor-disk instead of block storage).
     """
-    persisted = []
     # Word-count pre-filter instead of a post-hoc n_sh > 0 filter: the
     # latter gets predicate-pushed to the scan with the WHOLE shingle
     # construction inlined (one full extra interpreted evaluation per row);
@@ -275,14 +247,13 @@ def ngram_jaccard_pairs(
         F.min_by("n_sh", "doc_id").alias("n_sh"),
         F.min_by("sh_set", "doc_id").alias("sh_set"),
     )
-    if persist:
-        # eager localCheckpoint of the two REUSED intermediates instead of
-        # caching the full per-doc array table: members is ~50 B/doc (the
-        # members evaluation column-prunes sh_set away after set_hash),
-        # groups is one row per unique set.  Same rationale as
-        # _minhash_rep_graph.
-        members = members.localCheckpoint(eager=True)
-        groups = groups.localCheckpoint(eager=True)
+    # eager localCheckpoint of the two REUSED intermediates instead of
+    # caching the full per-doc array table: members is ~50 B/doc (the
+    # members evaluation column-prunes sh_set away after set_hash),
+    # groups is one row per unique set.  Same rationale as
+    # _minhash_rep_graph.
+    members = members.localCheckpoint(eager=True)
+    groups = groups.localCheckpoint(eager=True)
     rep_sh = groups.select("set_hash", "rep_id", F.explode("sh_set").alias("shingle"))
     if max_doc_freq is not None:
         keep = (
@@ -338,8 +309,7 @@ def ngram_jaccard_pairs(
             "jaccard",
         )
     )
-    out = within.unionByName(cross)
-    return _register_persisted(out, persisted)
+    return within.unionByName(cross)
 
 
 # ---------------------------------------------------------------------------
@@ -391,7 +361,6 @@ def containment_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persist: bool = True,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
     """(doc_src, doc_dst, containment): DIRECTED shingle containment
@@ -413,7 +382,6 @@ def containment_pairs(
     candidate pair are scored; each direction passes independently.
     Within-group (identical-set) members emit 1.0 both ways.
     """
-    persisted = []
     # Same pre-filter + parallelism-floor rationale as ngram_jaccard_pairs.
     df = _spread(
         df.select(F.col(id_col), F.col(text_col)).filter(
@@ -440,11 +408,10 @@ def containment_pairs(
         F.min_by("n_sh", "doc_id").alias("n_sh"),
         F.min_by("sh_set", "doc_id").alias("sh_set"),
     )
-    if persist:
-        # see ngram_jaccard_pairs: checkpoint the two small reused tables,
-        # never the full per-doc array table
-        members = members.localCheckpoint(eager=True)
-        groups = groups.localCheckpoint(eager=True)
+    # see ngram_jaccard_pairs: checkpoint the two small reused tables,
+    # never the full per-doc array table
+    members = members.localCheckpoint(eager=True)
+    groups = groups.localCheckpoint(eager=True)
     rep_sh = groups.select("set_hash", "rep_id", F.explode("sh_set").alias("shingle"))
     if max_doc_freq is not None:
         keep = (
@@ -501,8 +468,7 @@ def containment_pairs(
         .join(members.select(F.col("set_hash").alias("sh_d"), F.col("doc_id").alias("doc_dst")), "sh_d")
         .select("doc_src", "doc_dst", F.round("containment", 6).alias("containment"))
     )
-    out = within.unionByName(cross)
-    return _register_persisted(out, persisted)
+    return within.unionByName(cross)
 
 
 def shingle_sets(df: DataFrame, n: int = 2, text_col: str = "text", id_col: str = "doc_id"):
@@ -595,16 +561,15 @@ def _minhash_rep_graph(
     n: int,
     text_col: str,
     id_col: str,
-    persist: bool,
 ):
-    """Shared LSH core: (members, rep_pairs, persisted).
+    """Shared LSH core: (members, rep_pairs).
 
     members = (set_hash, doc_id) per doc; rep_pairs = verified near-dup
     edges BETWEEN unique shingle-sets (sh_a, sh_b, jaccard ≥ t).  See
     ``minhash_lsh_pairs`` for the design rationale.
 
-    With ``persist`` the two reused intermediates are materialized via
-    eager ``localCheckpoint`` rather than ``persist``: (a) ``members`` is
+    The two reused intermediates are materialized via eager
+    ``localCheckpoint`` rather than ``persist``: (a) ``members`` is
     a ~50 B/doc projection whose evaluation column-prunes the signature
     away entirely, and (b) ``groups`` is one row per UNIQUE shingle-set.
     The previous design cached the full per-doc (sh_set, sig) table —
@@ -616,7 +581,6 @@ def _minhash_rep_graph(
     """
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
-    persisted = []
     # Pre-filter on word count INSTEAD of post-filtering n_sh > 0: they are
     # equivalent (>= n words <=> >= 1 shingle), but the n_sh filter gets
     # predicate-pushed to the scan with the WHOLE shingle construction
@@ -646,9 +610,8 @@ def _minhash_rep_graph(
         F.min_by("n_sh", "doc_id").alias("n_sh"),
         F.min_by("sh_set", "doc_id").alias("sh_set"),
     )
-    if persist:
-        members = members.localCheckpoint(eager=True)
-        groups = groups.localCheckpoint(eager=True)
+    members = members.localCheckpoint(eager=True)
+    groups = groups.localCheckpoint(eager=True)
     # --- banded LSH over unique shingle-sets ---------------------------
     band_rows = groups.select(
         "set_hash",
@@ -691,14 +654,13 @@ def _minhash_rep_graph(
         .filter(F.col("jaccard") >= threshold)
         .select("sh_a", "sh_b", "jaccard")
     )
-    if persist:
-        # rep_pairs is consumed more than once downstream (the pair
-        # expansion under a global sort samples+sorts, i.e. executes its
-        # subtree twice; near-dedup's connected components iterate over
-        # it) — materialize the tiny verified-edge set once instead of
-        # re-running the band join + exact verify per consumer pass
-        rep_pairs = rep_pairs.localCheckpoint(eager=True)
-    return members, rep_pairs, persisted
+    # rep_pairs is consumed more than once downstream (the pair
+    # expansion under a global sort samples+sorts, i.e. executes its
+    # subtree twice; near-dedup's connected components iterate over
+    # it) — materialize the tiny verified-edge set once instead of
+    # re-running the band join + exact verify per consumer pass
+    rep_pairs = rep_pairs.localCheckpoint(eager=True)
+    return members, rep_pairs
 
 
 def minhash_lsh_pairs(
@@ -709,7 +671,6 @@ def minhash_lsh_pairs(
     n: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persist: bool = True,
 ) -> DataFrame:
     """Candidate pairs via banded LSH, verified by exact shingle Jaccard.
 
@@ -740,13 +701,13 @@ def minhash_lsh_pairs(
     size by definition; for corpus dedup at the 100 TB tier use
     ``minhash_near_dedup``, which never materializes member pairs.
 
-    ``persist`` materializes (eager localCheckpoint) the small reused
-    core tables; see ``_minhash_rep_graph``.  At the 100 TB tier,
-    materialize them to a staging table instead — same plan,
-    executor-disk instead of block-manager memory.
+    The small reused core tables are eager local checkpoints; see
+    ``_minhash_rep_graph``.  At the 100 TB tier, materialize them to a
+    staging table instead — same plan, executor-disk instead of
+    block-manager memory.
     """
-    members, rep_pairs, persisted = _minhash_rep_graph(
-        df, threshold, num_hashes, bands, n, text_col, id_col, persist
+    members, rep_pairs = _minhash_rep_graph(
+        df, threshold, num_hashes, bands, n, text_col, id_col
     )
     # --- expand group members back into doc pairs ----------------------
     # within-group: identical sets → jaccard exactly 1.0, always candidates.
@@ -778,8 +739,7 @@ def minhash_lsh_pairs(
             "jaccard",
         )
     )
-    out = within.unionByName(cross)
-    return _register_persisted(out, persisted)
+    return within.unionByName(cross)
 
 
 # ---------------------------------------------------------------------------
@@ -1069,7 +1029,6 @@ def minhash_near_dedup(
     n: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persist: bool = True,
     keep_by: "str | None" = None,
 ) -> DataFrame:
     """Corpus near-deduplication: keep one representative per
@@ -1099,8 +1058,8 @@ def minhash_near_dedup(
     """
     from .canonicalize import connected_components
 
-    members, rep_pairs, persisted = _minhash_rep_graph(
-        df, threshold, num_hashes, bands, n, text_col, id_col, persist
+    members, rep_pairs = _minhash_rep_graph(
+        df, threshold, num_hashes, bands, n, text_col, id_col
     )
     cc = connected_components(
         rep_pairs.select(F.col("sh_a").alias("src"), F.col("sh_b").alias("dst"))
@@ -1130,8 +1089,7 @@ def minhash_near_dedup(
         .filter(F.col("doc_id") != F.col("keep_id"))
         .select(F.col("doc_id").alias(id_col))
     )
-    out = df.join(dropped, id_col, "left_anti")
-    return _register_persisted(out, persisted)
+    return df.join(dropped, id_col, "left_anti")
 
 
 def dedup_exact_incremental(
@@ -1267,7 +1225,6 @@ def minhash_near_dedup_incremental(
     n: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persist: bool = True,
 ) -> DataFrame:
     """Dedup a NEW batch against an already-processed corpus WITHOUT
     touching the old documents — the production ingest path: maintain a
@@ -1295,12 +1252,15 @@ def minhash_near_dedup_incremental(
 
     ``existing_sets`` needs columns (set_hash, n_sh, sh_set, sig) — extra
     columns (doc_id) are ignored; duplicate set_hashes are collapsed.
+
+    The batch's signature table and its per-set groups are each read by
+    several branches, so both are lazy local checkpoints, filled by the
+    first job that reads them (the connected-components rounds).
     """
     from .canonicalize import connected_components
 
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
-    persisted = []
     # word-count pre-filter (== n_sh > 0, but pushes down cheaply; see
     # _minhash_rep_graph) + scan-parallelism floor.  Only the signature
     # staging narrows/filters — the kept output below still comes from the
@@ -1311,19 +1271,15 @@ def minhash_near_dedup_incremental(
         ),
         id_col,
     )
-    new_sets = minhash_doc_sets(new_staged, num_hashes, n, text_col, id_col)
-    if persist:
-        new_sets = new_sets.persist()
-        persisted.append(new_sets)
+    new_sets = minhash_doc_sets(
+        new_staged, num_hashes, n, text_col, id_col
+    ).localCheckpoint(eager=False)
     new_groups = new_sets.groupBy("set_hash").agg(
         F.min("doc_id").alias("rep_id"),
         F.min_by("sig", "doc_id").alias("sig"),
         F.min_by("n_sh", "doc_id").alias("n_sh"),
         F.min_by("sh_set", "doc_id").alias("sh_set"),
-    )
-    if persist:
-        new_groups = new_groups.persist()
-        persisted.append(new_groups)
+    ).localCheckpoint(eager=False)
     old = existing_sets.select("set_hash", "sig", "n_sh", "sh_set").dropDuplicates(
         ["set_hash"]
     )
@@ -1392,8 +1348,7 @@ def minhash_near_dedup_incremental(
         .filter(F.col("keep_id").isNull() | (F.col("doc_id") != F.col("keep_id")))
         .select(F.col("doc_id").alias(id_col))
     )
-    out = new_df.join(dropped, id_col, "left_anti")
-    return _register_persisted(out, persisted)
+    return new_df.join(dropped, id_col, "left_anti")
 
 
 def winnow_fingerprints(

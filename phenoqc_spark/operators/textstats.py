@@ -74,6 +74,9 @@ def pack_token_shards(
     3. per-partition totals (one tiny aggregate, #partitions rows) are
        prefix-summed on the driver and joined back as broadcast offsets.
 
+    The step-2 frame is a lazy local checkpoint: the totals collect fills
+    it, and the returned plan reads the same blocks.
+
     Docs longer than ``budget`` stay whole in the shard where their
     prefix lands (standard approximate packing — the splitter is a
     downstream tokenizer concern).
@@ -105,35 +108,25 @@ def pack_token_shards(
     )
     local = ranged.withColumn(
         "_local_prefix", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    ).persist()
-    try:
-        totals = {
-            r._pid: r.total
-            for r in local.groupBy("_pid")
-            .agg(F.sum("n_tokens").alias("total"))
-            .collect()
-        }
-        offsets, acc = {}, 0
-        for pid in sorted(totals):
-            offsets[pid] = acc
-            acc += totals[pid]
-        off_expr = F.lit(0).cast("long")
-        for pid, off in sorted(offsets.items()):
-            off_expr = F.when(F.col("_pid") == pid, F.lit(off)).otherwise(off_expr)
-        out = local.select(
-            "doc_id",
-            "n_tokens",
-            F.floor((off_expr + F.col("_local_prefix")) / F.lit(float(budget)))
-            .cast("long")
-            .alias("shard_id"),
-        )
-        # materialization note: the caller consumes this plan while the
-        # `local` cache backs it; attach for release like the dedup ops
-        out._phenoqc_persisted = [local]  # type: ignore[attr-defined]
-        return out
-    except Exception:
-        local.unpersist()
-        raise
+    ).localCheckpoint(eager=False)
+    totals = {
+        r._pid: r.total
+        for r in local.groupBy("_pid").agg(F.sum("n_tokens").alias("total")).collect()
+    }
+    offsets, acc = {}, 0
+    for pid in sorted(totals):
+        offsets[pid] = acc
+        acc += totals[pid]
+    off_expr = F.lit(0).cast("long")
+    for pid, off in sorted(offsets.items()):
+        off_expr = F.when(F.col("_pid") == pid, F.lit(off)).otherwise(off_expr)
+    return local.select(
+        "doc_id",
+        "n_tokens",
+        F.floor((off_expr + F.col("_local_prefix")) / F.lit(float(budget)))
+        .cast("long")
+        .alias("shard_id"),
+    )
 
 
 def chunk_documents(
@@ -509,11 +502,11 @@ def bm25_topk(
             F.sum(F.when(F.col("token") == t, 1).otherwise(0)).alias(f"tf_{i}")
             for i, t in enumerate(terms)
         ],
-    ).persist()
-    # persist: per_doc feeds BOTH the stats aggregate and the scoring
-    # branch — without it the plan re-scans the whole corpus twice.  The
-    # cached frame is doc-count-sized scalars (|Q|+2 longs per doc), not
-    # corpus text; MEMORY_AND_DISK absorbs any overflow.
+    ).localCheckpoint(eager=False)
+    # per_doc feeds BOTH the stats aggregate and the scoring branch —
+    # without the (lazy) local checkpoint the plan re-scans the whole
+    # corpus twice.  The first action fills it with doc-count-sized
+    # scalars (|Q|+2 longs per doc), not corpus text.
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("_N"),
         F.avg("dl").alias("_avgdl"),
@@ -545,15 +538,9 @@ def bm25_topk(
     # the single-partition row_number then touches only <= k rows
     topk = ranked.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    out = topk.withColumn("rank", F.row_number().over(w)).select(
+    return topk.withColumn("rank", F.row_number().over(w)).select(
         "doc_id", "score", "rank"
     )
-    # register the persisted per-doc frame on the result so long-lived
-    # sessions can free it via dedup.release_intermediates (same
-    # lifecycle contract as the LSH dedup operators)
-    from .dedup import _register_persisted
-
-    return _register_persisted(out, [per_doc])
 
 
 _TRACKING_PARAMS = (
@@ -881,18 +868,16 @@ def url_filter(
     The resulting per-URL hit frame scales with the BLOCKED count (a
     large corpus fraction when the list bites), so the join back onto
     the payload uses the same auto-broadcast guard as
-    ``dedup.dedup_exact``: persist + count, broadcast ≤ 10 M rows, else
-    shuffled join.  Call ``dedup.release_intermediates`` on the result
-    when done (blocklist mode only).
+    ``dedup.dedup_exact``: a lazy local checkpoint, materialized by one
+    size aggregate; broadcast ≤ 10 M rows and ≤ 128 MB, else shuffled
+    join.
 
     ``flag_only=True`` appends ``blocked`` + ``block_reason``
     (host > suffix > path precedence) for audit queries; default drops
     blocked rows.
     """
-    from phenoqc_spark.operators.dedup import _register_persisted
     host = _url_filter_host(url_col)
     path = F.coalesce(F.try_parse_url(F.col(url_col), F.lit("PATH")), F.lit(""))
-    persisted: list[DataFrame] = []
 
     hosts = [h.lower().lstrip(".") for h in (block_hosts or [])]
     suffixes = [s.lower().lstrip(".") for s in (block_suffixes or [])]
@@ -937,12 +922,11 @@ def url_filter(
                 F.max(F.when((F.col("_blk") == "host") & (F.col("_sfx") == F.col("_host")), 1).otherwise(0)).alias("_bh"),
                 F.max(F.when(F.col("_blk") == "suffix", 1).otherwise(0)).alias("_bs"),
             )
-        ).persist()
-        persisted.append(hits)
+        ).localCheckpoint(eager=False)
         # broadcast guard on estimated BYTES, not row count: unlike
         # dedup_exact's 8-byte-id drop list, each hit row carries a full
         # URL string, so a row-count-only threshold could broadcast GBs
-        # (ADVICE r5).  One aggregate over the persisted frame prices it.
+        # (ADVICE r5).  One aggregate prices it and fills the checkpoint.
         sz = hits.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum(F.length("_u")), F.lit(0)).alias("b"),
@@ -976,7 +960,7 @@ def url_filter(
         out = out.drop("_bh", "_bs")
     if not flag_only:
         out = out.filter(~F.col(out_col)).drop(out_col, reason_col)
-    return _register_persisted(out, persisted) if persisted else out
+    return out
 
 
 def robots_rules(

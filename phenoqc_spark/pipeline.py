@@ -97,53 +97,34 @@ def extract_records(
     return df.select(*cols)
 
 
-def build_triples(
-    records: DataFrame, resolver_bc, link_mode: str = "inline"
-):
+def build_triples(records: DataFrame, resolver_bc):
     """records → (triples_df, terms_df).
 
-    link_mode='inline' (default): single fact-side pass, per-executor memo
-    cache — the upstream extract/parse runs exactly once.
-    link_mode='vocab': global distinct vocabulary + broadcast join-back —
-    reads the upstream twice; right when the input is a cheap re-scannable
-    table and the vocabulary must be resolved exactly once globally.
+    Single fact-side pass with a per-executor memo cache — the upstream
+    extract/parse runs exactly once.  Normalization is fused into the link
+    UDF, so the fact path has ONE Python stage (extraction is JVM by
+    default); the raw term string is dropped from the Arrow return path
+    (term_norm is what everything downstream keys on).  ``terms_df`` is
+    the un-normalized term rows.
     """
     from .functions.linking import link_terms_inline
 
-    if link_mode == "inline":
-        # normalization fused into the link UDF — ONE Python stage on the
-        # fact path (extraction is JVM by default since r6); the raw term
-        # string is dropped from the Arrow return path (term_norm is what
-        # everything downstream keys on)
-        terms = T.terms_long(records, normalize=False)
-        linked = link_terms_inline(
-            terms, resolver_bc, normalize=True, drop_input_cols=("term",)
-        )
-    else:
-        terms = T.terms_long(records)
-        links = T.resolve_vocab(terms, resolver_bc)
-        linked = T.link_terms(terms, links)
+    terms = T.terms_long(records, normalize=False)
+    linked = link_terms_inline(
+        terms, resolver_bc, normalize=True, drop_input_cols=("term",)
+    )
     return T.triples(linked), terms
 
 
-def run_pipeline(
-    spark: SparkSession,
-    pages: DataFrame,
-    resolver,
-    link_mode: str = "inline",
-) -> dict:
+def run_pipeline(spark: SparkSession, pages: DataFrame, resolver) -> dict:
     """Full DAG; returns {'triples', 'records', 'terms', 'mapping_stats'}."""
     from .functions.text import normalize_terms as _norm_udf
     from pyspark.sql import functions as _F
 
     resolver_bc = spark.sparkContext.broadcast(resolver)
     records = extract_records(pages)
-    trip, terms = build_triples(records, resolver_bc, link_mode)
-    terms_n = (
-        terms
-        if "term_norm" in terms.columns
-        else terms.withColumn("term_norm", _norm_udf(_F.col("term")))
-    )
+    trip, terms = build_triples(records, resolver_bc)
+    terms_n = terms.withColumn("term_norm", _norm_udf(_F.col("term")))
     return {
         "records": records,
         "triples": trip,

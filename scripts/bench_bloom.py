@@ -74,12 +74,7 @@ def main() -> None:
         return dedup_exact_incremental(batch, state).count()
 
     def run_bloom():
-        from phenoqc_spark.operators.dedup import release_intermediates
-
-        out = B.dedup_exact_incremental_bloom(batch, state, bloom=bloom)
-        n = out.count()
-        release_intermediates(out)  # free the per-call probed-batch cache
-        return n
+        return B.dedup_exact_incremental_bloom(batch, state, bloom=bloom).count()
 
     # untimed warmup of BOTH plan shapes (C2 JIT / Python worker pool)
     n_plain, n_bloom = run_plain(), run_bloom()

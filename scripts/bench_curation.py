@@ -57,7 +57,6 @@ spark = get_spark("bench-curation", master=f"local[{cpus}]", extra_conf={
 spark.sparkContext.setLogLevel("ERROR")
 from phenoqc_spark import pages as PG
 from phenoqc_spark.curation import curate_corpus
-from phenoqc_spark.operators.dedup import release_intermediates
 
 data_dir = f"/tmp/curation_pages_{rows}"
 if not os.path.exists(data_dir):
@@ -103,14 +102,13 @@ def load():
 kwargs = %(kwargs)s
 # warmup: full plan shape on a slice (C2 JIT + Arrow worker pool)
 w, _ = curate_corpus(load().limit(100000), count_stages=False, **kwargs)
-w.count(); release_intermediates(w)
+w.count()
 times, n_out = [], 0
 for _ in range(int(os.environ.get("CURATION_REPS", "3"))):
     t0 = time.time()
     out, _ = curate_corpus(load(), count_stages=False, **kwargs)
     n_out = out.count()
     times.append(time.time() - t0)
-    release_intermediates(out)
     spark.catalog.clearCache()
 dt = min(times)
 print(json.dumps({"cpus": int(cpus), "pages": rows, "sec": round(dt, 2),

@@ -98,22 +98,20 @@ def main() -> None:
     timed("exact_dedup", lambda: D.dedup_exact(docs).count())
     timed("exact_groups", lambda: D.exact_duplicate_groups(docs).count())
 
-    def run_minhash():
-        out = D.minhash_lsh_pairs(docs, threshold=0.8, num_hashes=32, bands=8)
-        n = out.count()
-        D.release_intermediates(out)
-        return n
-
     if not SKIP_PAIR_OPS:
-        timed("minhash_lsh_pairs", run_minhash)
+        timed(
+            "minhash_lsh_pairs",
+            lambda: D.minhash_lsh_pairs(
+                docs, threshold=0.8, num_hashes=32, bands=8
+            ).count(),
+        )
 
-    def run_near_dedup():
-        out = D.minhash_near_dedup(docs, threshold=0.8, num_hashes=32, bands=8)
-        nkeep = out.count()
-        D.release_intermediates(out)
-        return nkeep
-
-    timed("minhash_near_dedup", run_near_dedup)
+    timed(
+        "minhash_near_dedup",
+        lambda: D.minhash_near_dedup(
+            docs, threshold=0.8, num_hashes=32, bands=8
+        ).count(),
+    )
     if not SKIP_PAIR_OPS:
         timed(
             "simhash_near_dups",
@@ -138,12 +136,9 @@ def main() -> None:
 
     def run_incremental():
         state = spark.read.parquet(state_dir)
-        out = D.minhash_near_dedup_incremental(
+        return D.minhash_near_dedup_incremental(
             new_docs, state, threshold=0.8, num_hashes=32, bands=8
-        )
-        nkeep = out.count()
-        D.release_intermediates(out)
-        return nkeep
+        ).count()
 
     timed("incremental_near_dedup", run_incremental)
 

@@ -434,9 +434,9 @@ def test_stream_source_counters_state_survives_restart(spark, tmp_path):
     assert got2["srcA"] == (2, 7)
 
 
-def test_ngram_max_doc_freq_and_release(spark):
+def test_ngram_max_doc_freq_keeps_jaccard(spark):
     """The df-cut drops hub-shingle-only pairs from candidate generation but
-    never changes a reported jaccard; release_intermediates frees caches."""
+    never changes a reported jaccard."""
     rows = [
         # 0/1 share distinctive shingles; 2..5 share ONLY the hub bigram
         (0, "unique alpha beta hub tok"),
@@ -463,11 +463,6 @@ def test_ngram_max_doc_freq_and_release(spark):
     # pairs connected ONLY via the hub shingle ('hub tok' appears in 5 sets
     # > cap 2) are dropped from candidates
     assert (2, 3) in exact and (2, 3) not in capped
-    # lifecycle: unpersist attached intermediates without error
-    sc = spark.sparkContext._jsc.sc()
-    D.release_intermediates(capped_df)
-    assert getattr(capped_df, "_phenoqc_persisted") == []
-    D.release_intermediates(capped_df)  # idempotent, no-op
 
 
 def test_minhash_near_dedup_keeplist(spark):
@@ -481,7 +476,6 @@ def test_minhash_near_dedup_keeplist(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     kept_df = D.minhash_near_dedup(df, threshold=0.5, num_hashes=32, bands=16)
     kept = sorted(r.doc_id for r in kept_df.collect())
-    D.release_intermediates(kept_df)
     # 0/1/2 cluster together -> keep 0; 3 and 4 survive
     assert kept == [0, 3, 4]
 
@@ -571,7 +565,6 @@ def test_minhash_near_dedup_keep_by_quality(spark):
         df, threshold=0.5, num_hashes=32, bands=16, keep_by="quality"
     )
     kept = sorted(r.doc_id for r in kept_df.collect())
-    D.release_intermediates(kept_df)
     # cluster {0,1,2,5}: max quality 5.0 held by 1 and 5 -> min-id tiebreak
     # keeps 1; singleton 3 survives despite null score; 4 survives
     assert kept == [1, 3, 4]
@@ -633,6 +626,7 @@ def test_stream_near_dedup_docs_across_batches(spark, tmp_path):
     batch-1 doc arriving in batch 2 is suppressed."""
     from phenoqc_spark.streaming.pipeline import stream_near_dedup_docs
 
+    spark.catalog.clearCache()  # the session fixture is shared
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     src = str(tmp_path / "docs_in")
     out_dir = str(tmp_path / "kept")
@@ -655,6 +649,9 @@ def test_stream_near_dedup_docs_across_batches(spark, tmp_path):
     b2 = [(2, f"{base} two"), (3, "yet another unrelated document body entirely")]
     spark.createDataFrame(b2, "doc_id long, text string").write.mode("append").parquet(src)
     assert run_once() == [0, 1, 3]  # doc 2 near-matches state → suppressed
+    # batch 2 took the incremental path; no micro-batch leaves a cached
+    # frame behind in the long-running session
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_stream_near_dedup_docs_replay_idempotent(spark, tmp_path):
@@ -1023,7 +1020,6 @@ def test_url_filter_literal_and_blocklist_paths_agree(spark):
     out = X.url_filter(df, blocklist=bl, flag_only=True)
     flagged2 = {r.doc_id: r.block_reason for r in out.collect() if r.blocked}
     assert flagged2 == want
-    D.release_intermediates(out)
     # literal path is map-only pure codegen
     from tests.test_plan_shapes import plan_text
 
@@ -2255,3 +2251,50 @@ def test_containment_pairs_directed_asymmetry(spark):
     }
     for k, v in capped.items():
         assert got[k] == v
+
+
+def test_operators_leave_no_cached_frames(spark):
+    """Operators that reuse an intermediate hold it as a local checkpoint,
+    never as a CacheManager entry: after materializing each of them (and
+    a counted curation run) the session's cache is empty, so a
+    long-running ingest loop does not accumulate cached blocks."""
+    from phenoqc_spark.curation import curate_corpus
+    from phenoqc_spark.operators import bloom as B
+    from phenoqc_spark.operators import canonicalize as C
+
+    spark.catalog.clearCache()  # the session fixture is shared
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    docs = spark.createDataFrame(
+        [
+            (i, f"https://h{i % 5}.example.org/p{i}",
+             f"{base} family {i % 3} shared run of words" + ("" if i % 4 else f" x{i}"))
+            for i in range(24)
+        ],
+        "doc_id long, url string, text string",
+    )
+    new = docs.select((F.col("doc_id") + 100).alias("doc_id"), "text")
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4), (2, 4)], "src long, dst long"
+    )
+    blocklist = spark.createDataFrame(
+        [("host", "h1.example.org"), ("suffix", "h2.example.org")],
+        "kind string, value string",
+    )
+    state = docs.filter(F.col("doc_id") < 6).select(F.md5("text").alias("content_hash"))
+    D.dedup_exact(docs).collect()
+    D.minhash_near_dedup_incremental(
+        new, D.minhash_doc_sets(docs, num_hashes=32), threshold=0.7,
+        num_hashes=32, bands=8,
+    ).collect()
+    X.pack_token_shards(docs, 40).collect()
+    X.bm25_topk(docs, ["family", "x4"], k=5).collect()
+    X.url_filter(docs, url_col="url", blocklist=blocklist).collect()
+    B.dedup_exact_incremental_bloom(new, state).collect()
+    C.graph_triangles(edges).collect()
+    C.clustering_coefficients(edges).collect()
+    out, report = curate_corpus(
+        docs, url_col="url", url_blocklist={"blocklist": blocklist},
+        near_dedup={"threshold": 0.7, "num_hashes": 32, "bands": 8},
+    )
+    assert len(out.collect()) == report["near_dedup"] > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -1787,16 +1787,6 @@ def test_bm25_ranking_semantics(spark):
     assert sb[3] > s[2]
     with pytest.raises(ValueError, match="empty"):
         bm25_topk(df, [])
-    # the persisted per-doc frame is registered for release (same
-    # lifecycle as the dedup operators) so ingest loops don't accumulate
-    # doc-count-sized caches
-    from phenoqc_spark.operators.dedup import release_intermediates
-
-    res = bm25_topk(df, ["apple"], k=3)
-    handles = getattr(res, "_phenoqc_persisted", [])
-    assert len(handles) == 1 and handles[0].storageLevel.useMemory
-    release_intermediates(res)
-    assert not handles[0].storageLevel.useMemory
 
 
 def test_histogram_state_quantiles_and_merge(spark):
