@@ -20,6 +20,7 @@ key (in insertion order) achieving the maximum score wins.
 
 from __future__ import annotations
 
+import itertools
 from functools import lru_cache
 
 try:  # pragma: no cover - exercised only where rapidfuzz exists
@@ -214,9 +215,9 @@ def _str_stats(s: str):
 
 
 def build_key_stats(keys):
-    """Precomputed :func:`_str_stats` per key (None for empty keys) —
-    built once per process by the resolver so the 50k-key scan prunes
-    with O(distinct-chars) bag math instead of full WRatio."""
+    """Precomputed :func:`_str_stats` per key (None for empty keys): the
+    scalar form of the prune, O(distinct-chars) bag math per key instead
+    of full WRatio.  Tests compare :class:`KeyIndex` against it."""
     return [(_str_stats(k) if k else None) for k in keys]
 
 
@@ -271,82 +272,102 @@ def _wratio_upper_bound(q, k) -> float:
 
 
 class KeyIndex:
-    """Vectorized per-key stats for the character-bag WRatio bound.
+    """Per-key stats for the character-bag WRatio bound, evaluated for all
+    keys in one numpy pass.
 
-    Dense numpy count matrices over the keys' charset, one per WRatio
-    operand variant (original / token-sorted join / unique-token join),
-    plus a token→keys inverted index for the token_set 100-shortcut.
-    :meth:`bounds` evaluates :func:`_wratio_upper_bound`'s exact branch
-    math for ALL keys in one numpy pass — at 50k keys this turns the
-    857 ms/query pure-Python bound scan into ~2 ms (BENCH/PR.md), while
-    :func:`extract_one` results stay bit-identical (the numpy bound is
-    the same rational-in-float arithmetic, tested equal to the scalar
-    to 1e-9 in tests/test_properties.py).
+    One count matrix over the keys' charset per WRatio operand variant
+    (original / token-sorted join / unique-token join), stored transposed
+    as ``(chars, keys)`` in the smallest unsigned type that holds the
+    counts, so a query's characters gather contiguous rows.  A variant
+    whose bags equal the original's for every key shares its array.  A
+    token→keys index (one offsets and one ids array) serves the token_set
+    100-shortcut.  :meth:`bounds` applies :func:`_wratio_upper_bound`'s
+    branch math element-wise with the same float expressions, so it is
+    bit-identical to the scalar bound (tests/test_properties.py) and
+    :func:`extract_one` returns the same (key, score) with or without it.
 
-    Built once per worker process by the resolver (excluded from the
-    broadcast pickle — mapper.TermResolver.__getstate__).
+    ``TermResolver`` builds one per ontology when it is constructed on the
+    driver; the index rides the broadcast pickle, so a worker only
+    unpickles arrays and never builds one.
     """
 
     def __init__(self, keys):
         import numpy as np
 
         n = len(keys)
-        char_ix: dict = {}
-        tok_ix: dict = {}
-        rows = []  # (bags triple) per key, None for empty keys
-        self.valid = np.zeros(n, dtype=bool)
-        l0 = np.ones(n, dtype=np.int64)
-        l1 = np.ones(n, dtype=np.int64)
-        l2 = np.ones(n, dtype=np.int64)
-        for i, k in enumerate(keys):
-            if not k:
-                rows.append(None)
-                continue
-            self.valid[i] = True
-            toks = k.split()
-            ks = " ".join(sorted(toks))
-            ku = " ".join(sorted(set(toks)))
-            l0[i], l1[i], l2[i] = len(k), len(ks), len(ku)
-            b0 = _bag(k)
-            b1 = b0 if ks == k else _bag(ks)
-            b2 = b0 if ku == k else _bag(ku)
-            rows.append((b0, b1, b2))
-            for b in (b0, b1, b2):
-                for ch in b:
-                    if ch not in char_ix:
-                        char_ix[ch] = len(char_ix)
-            for t in set(toks):
-                tok_ix.setdefault(t, []).append(i)
-        C = len(char_ix)
-        m0 = np.zeros((n, C), dtype=np.int32)
-        m1 = np.zeros((n, C), dtype=np.int32)
-        m2 = np.zeros((n, C), dtype=np.int32)
-        for i, r in enumerate(rows):
-            if r is None:
-                continue
-            for m, b in zip((m0, m1, m2), r):
-                for ch, cnt in b.items():
-                    m[i, char_ix[ch]] = cnt
-        self.char_ix = char_ix
-        self.tok_ix = {t: np.asarray(ix, dtype=np.int64) for t, ix in tok_ix.items()}
+        rows = np.arange(n, dtype=np.int64)
+        l0 = np.fromiter(map(len, keys), dtype=np.int64, count=n)
+        self.valid = l0 > 0
+        # character columns: the keys' code points plus ' ', the joiner of
+        # the token variants; one bincount over (column, key) fills m0
+        cps = np.frombuffer(
+            "".join(keys).encode("utf-32-le", "surrogatepass"), dtype=np.uint32
+        )
+        seen = np.bincount(cps, minlength=33)
+        seen[32] = 1
+        chars = seen.nonzero()[0]
+        C = len(chars)
+        lut = np.zeros(len(seen), dtype=np.int64)
+        lut[chars] = np.arange(C)
+        m0 = np.bincount(lut[cps] * n + np.repeat(rows, l0), minlength=C * n).reshape(C, n)
+        # no variant count exceeds the largest original count
+        m0 = m0.astype(np.min_scalar_type(int(m0.max(initial=0))))
+        char_list = [chr(c) for c in chars.tolist()]
+        self.char_ix = {ch: j for j, ch in enumerate(char_list)}
+        # token-sorted join: str.split() drops every isspace run, and the
+        # join puts ntok-1 single spaces back
+        toks = [k.split() for k in keys]
+        ntok = np.fromiter(map(len, toks), dtype=np.int64, count=n)
+        ws = np.array([ch.isspace() for ch in char_list], dtype=bool)
+        sp = self.char_ix[" "]
+        m1 = m0.copy()
+        m1[ws] = 0
+        m1[sp] = np.maximum(ntok - 1, 0)
+        l1 = l0 - m0[ws].sum(axis=0, dtype=np.int64) + m1[sp]
+        if np.array_equal(m1, m0):
+            m1 = m0
+        # token→keys, deduplicated per key; a key with fewer distinct
+        # tokens than tokens gets its own unique-token join bag
+        flat = list(itertools.chain.from_iterable(toks))
+        tok_id = dict(zip(dict.fromkeys(flat), itertools.count()))
+        tids = np.fromiter(map(tok_id.__getitem__, flat), dtype=np.int64, count=len(flat))
+        pairs = np.unique(tids * n + np.repeat(rows, ntok))
+        ptok, pkey = np.divmod(pairs, n)
+        self.tok_id = tok_id
+        self.tok_off = np.concatenate(
+            ([0], np.cumsum(np.bincount(ptok, minlength=len(tok_id))))
+        )
+        self.tok_keys = pkey.astype(np.int32)
+        m2, l2 = m1, l1
+        repeats = (np.bincount(pkey, minlength=n) < ntok).nonzero()[0]
+        if len(repeats):
+            m2, l2 = m1.copy(), l1.copy()
+            for i in repeats.tolist():
+                ku = " ".join(sorted(set(toks[i])))
+                m2[:, i] = 0
+                for ch, cnt in _bag(ku).items():
+                    m2[self.char_ix[ch], i] = cnt
+                l2[i] = len(ku)
         self.m0, self.m1, self.m2 = m0, m1, m2
-        self.l0, self.l1, self.l2 = l0, l1, l2
+        # empty keys get length 1 so the masked-out bound math stays finite
+        self.l0, self.l1, self.l2 = (np.where(self.valid, x, 1) for x in (l0, l1, l2))
 
-    @staticmethod
-    def _common(mat, char_ix, bag):
+    def _common(self, mat, bag):
+        """Bag overlap of ``bag`` with every key's column of ``mat``."""
         import numpy as np
 
         cols, counts = [], []
         for ch, cnt in bag.items():
-            j = char_ix.get(ch)
+            j = self.char_ix.get(ch)
             if j is not None:
                 cols.append(j)
                 counts.append(cnt)
         if not cols:
-            return np.zeros(mat.shape[0], dtype=np.int64)
-        sub = mat[:, cols]
-        q = np.asarray(counts, dtype=np.int32)
-        return np.minimum(sub, q).sum(axis=1, dtype=np.int64)
+            return np.zeros(mat.shape[1], dtype=np.int64)
+        # clipping the query counts to the matrix type's range cannot
+        # change min(count, key count)
+        q = np.minimum(counts, np.iinfo(mat.dtype).max).astype(mat.dtype)
+        return np.minimum(mat[cols], q[:, None]).sum(axis=0, dtype=np.int64)
 
     def bounds(self, qstat):
         """Vector of :func:`_wratio_upper_bound` over all keys (−1 for
@@ -354,15 +375,25 @@ class KeyIndex:
         import numpy as np
 
         (lq, tq, bq, lsq, bsq, luq, buq) = qstat
-        c0 = self._common(self.m0, self.char_ix, bq)
-        c1 = self._common(self.m1, self.char_ix, bsq)
-        c2 = self._common(self.m2, self.char_ix, buq)
+        done = []  # (matrix, bag, overlap): variants often share both
+
+        def common(mat, bag):
+            for m, b, c in done:
+                if m is mat and b == bag:
+                    return c
+            c = self._common(mat, bag)
+            done.append((mat, bag, c))
+            return c
+
+        c0 = common(self.m0, bq)
+        c1 = common(self.m1, bsq)
+        c2 = common(self.m2, buq)
         l0, l1, l2 = self.l0, self.l1, self.l2
         shared = np.zeros(len(l0), dtype=bool)
         for t in tq:
-            ix = self.tok_ix.get(t)
-            if ix is not None:
-                shared[ix] = True
+            j = self.tok_id.get(t)
+            if j is not None:
+                shared[self.tok_keys[self.tok_off[j] : self.tok_off[j + 1]]] = True
         r = 200.0 * c0 / (lq + l0)
         lo = np.minimum(lq, l0)
         hi = np.maximum(lq, l0)
@@ -390,8 +421,9 @@ class KeyIndex:
 
 
 def build_key_index(keys) -> KeyIndex:
-    """Vectorized twin of :func:`build_key_stats` — same prune contract,
-    numpy-batched bound evaluation (see :class:`KeyIndex`)."""
+    """Vectorized twin of :func:`build_key_stats`: the same prune, with
+    the bound evaluated for all keys in one numpy pass (see
+    :class:`KeyIndex`)."""
     return KeyIndex(keys)
 
 
@@ -403,15 +435,14 @@ def extract_one(query: str, keys, score_cutoff: float, key_stats=None):
     term order the chosen key (and thus the mapped id) is identical to the
     reference (SURVEY.md §7.4 risk 1).
 
-    ``key_stats`` (from :func:`build_key_stats`) enables the character-bag
-    upper-bound prune — at HPO dictionary scale (50k keys) this is the
-    difference between ~50k full WRatio evaluations per distinct
-    unmatched surface and a handful (measured 5.3× end-to-end, 7.2× on
-    the fuzzy-tier overhead, on the 1M-page pipeline — BENCH/PR.md):
-    the earlier length-ratio caps (95/90) never fired at the standard
-    cutoff of 80.  The bound only
-    SKIPS keys that provably cannot reach max(cutoff, best), so the
-    returned (key, score) is bit-identical with and without stats.
+    ``key_stats`` (a :class:`KeyIndex` from :func:`build_key_index`, or
+    the per-key list from :func:`build_key_stats`) enables the
+    character-bag upper-bound prune: at HPO dictionary scale (50k keys)
+    a distinct unmatched surface pays a handful of full WRatio
+    evaluations instead of ~50k.  The bound only SKIPS keys that provably
+    cannot reach max(cutoff, best), so the returned (key, score) is
+    bit-identical with and without stats.  The rapidfuzz path ignores
+    ``key_stats``.
     """
     if not query:
         return None

@@ -44,6 +44,10 @@ PREFIX_ALIASES = {
 
 _PREFIX_SPACE_RE = re.compile(r"^([a-z]+)\s+(\w+)$")
 
+# resolver memo entries per process: open web text brings an unbounded
+# stream of distinct misspellings, so the memo is cleared when full
+_MEMO_MAX = 100_000
+
 
 class TermResolver:
     """Broadcastable ontology dictionaries + the resolution cascade."""
@@ -67,11 +71,19 @@ class TermResolver:
         self.alt_to_primary = alt_to_primary or {}
         # ordered key tuples for the fuzzy tier (stable tie-break)
         self._key_lists = {o: tuple(d.keys()) for o, d in ontologies.items()}
+        # the fuzzy prune's bound index per ontology (fuzzy.KeyIndex), built
+        # here on the driver and shipped in the broadcast pickle, so workers
+        # never build one; the rapidfuzz path does not use it
+        self._key_index = (
+            {}
+            if fuzzy.HAVE_RAPIDFUZZ
+            else {o: fuzzy.build_key_index(k) for o, k in self._key_lists.items() if k}
+        )
+        # per-process memo, the only state a worker adds; cleared when it
+        # holds _MEMO_MAX entries (the cap is read here so the broadcast
+        # copy carries the driver's value)
         self._cache: Dict[str, Dict[str, Optional[str]]] = {}
-        # per-process char-bag stats for the fuzzy prune (fuzzy.extract_one);
-        # built lazily on first fuzzy miss per ontology, excluded from
-        # pickle so the broadcast ships only the dictionaries
-        self._key_stats: Dict[str, list] = {}
+        self._memo_max = _MEMO_MAX
 
     # -- construction -------------------------------------------------------
 
@@ -169,13 +181,11 @@ class TermResolver:
             if mapped is not None:
                 res = (mapped, "exact", 100.0)
             elif d and term_norm:
-                keys = self._key_lists.get(onto, ())
-                stats = self._key_stats.get(onto)
-                if stats is None and keys:
-                    stats = fuzzy.build_key_index(keys)
-                    self._key_stats[onto] = stats
                 hit = fuzzy.extract_one(
-                    term_norm, keys, self.fuzzy_threshold, key_stats=stats
+                    term_norm,
+                    self._key_lists.get(onto, ()),
+                    self.fuzzy_threshold,
+                    key_stats=self._key_index.get(onto),
                 )
                 if hit is not None:
                     fid = d.get(hit[0])
@@ -214,6 +224,8 @@ class TermResolver:
         hit = self._cache.get(term_norm)
         if hit is None:
             hit = self.map_term_detailed(term_norm)
+            if len(self._cache) >= self._memo_max:
+                self._cache.clear()
             self._cache[term_norm] = hit
         return hit
 
@@ -226,5 +238,4 @@ class TermResolver:
     def __getstate__(self):
         state = dict(self.__dict__)
         state["_cache"] = {}
-        state["_key_stats"] = {}
         return state

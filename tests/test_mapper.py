@@ -137,6 +137,36 @@ def test_id_keys_are_fuzzy_candidates_at_cutoff(resolver):
     assert det["HPO"] == ("HP:0001939", "fuzzy", 80.0)
 
 
+def test_unpickled_resolver_never_builds_a_key_index(resolver, monkeypatch):
+    """The fuzzy prune's index is built with the resolver on the driver and
+    rides the broadcast pickle: a worker's copy resolves fuzzy misses
+    without building one, to the same (id, tier, score)."""
+    import pickle
+
+    typos = [
+        "Hypertention",
+        "hypertensoin",
+        "Diabetis mellitus",
+        "astma",
+        "obesty",
+        "High blod pressure",
+        "Reactive airway diseas",
+        "sugar  diabetis",
+        "Mp:0001943",
+        "Xyzzypopple",
+    ]
+    want = {t: resolver.map_term_detailed(t) for t in typos}
+    assert sum(v is not None and v[1] == "fuzzy" for d in want.values() for v in d.values()) >= 8
+    copy = pickle.loads(pickle.dumps(resolver))
+
+    def no_build(keys):
+        raise AssertionError("key index built after unpickling")
+
+    monkeypatch.setattr(fuzzy, "build_key_index", no_build)
+    assert copy._cache == {}
+    assert {t: copy.map_term_cached(normalize_text(t)) for t in typos} == want
+
+
 def test_resolver_from_config_url_source(tmp_path):
     """End-to-end: source:url configs route through the cached fetcher with
     the reference's retry / cache-hit / expiry / offline semantics

@@ -63,6 +63,31 @@ def test_mapping_stats_shape(spark, resolver):
         assert 0 <= r.success_rate_pct <= 100
 
 
+def test_memo_cap_keeps_links_identical(spark, onto_dir, monkeypatch):
+    """A resolver memo cleared every two entries links exactly like the
+    default one: the cap trades only repeat resolutions."""
+    from phenoqc_spark.fixtures import fixture_config
+    from phenoqc_spark.functions.linking import link_terms_inline
+    from phenoqc_spark.ontology import TermResolver, mapper
+    from phenoqc_spark.operators import triples as T
+
+    pages = PG.generate_pages(spark, 200, partitions=4)
+    terms = T.terms_long(extract_records(pages), normalize=False)
+
+    def links(resolver):
+        bc = spark.sparkContext.broadcast(resolver)
+        out = link_terms_inline(terms, bc, normalize=True, drop_input_cols=("term",))
+        return sorted(tuple(r) for r in out.collect())
+
+    want = links(TermResolver.from_config(fixture_config(onto_dir)))
+    monkeypatch.setattr(mapper, "_MEMO_MAX", 2)
+    capped = TermResolver.from_config(fixture_config(onto_dir))
+    for t in ("hypertension", "astma", "obesty"):
+        capped.map_term_cached(t)
+    assert len(capped._cache) <= 2
+    assert want and links(capped) == want
+
+
 def test_malformed_fields_coerce_not_crash(spark):
     """One malformed numeric field (or URL) in web text must coerce to
     NULL — reference pd.to_numeric(errors='coerce') semantics — not kill

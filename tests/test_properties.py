@@ -135,12 +135,40 @@ def test_extract_one_prune_is_behavior_identical(term, keys, cutoff):
     )
 
 
+# keys beyond single-spaced ASCII words: leading/trailing/doubled spaces,
+# tabs and NBSP (str.split() whitespace), repeated tokens, non-ASCII
+# letters, the empty key, and one key past 255 copies of a character
+# (the count matrices widen from uint8)
+odd_token = st.text(alphabet=st.sampled_from("abcéß"), min_size=1, max_size=4)
+odd_sep = st.sampled_from([" ", "  ", "\t", "\xa0", " \t"])
+odd_key_st = st.one_of(
+    word_st,
+    st.just(""),
+    st.just("a" * 300),
+    st.builds(lambda t, sep: sep.join([t, t, "b"]), odd_token, odd_sep),
+    st.builds(
+        lambda pre, toks, sep, post: pre + sep.join(toks) + post,
+        st.sampled_from(["", " ", "\t", "\xa0"]),
+        st.lists(odd_token, min_size=1, max_size=4),
+        odd_sep,
+        st.sampled_from(["", " ", "  ", "\xa0"]),
+    ),
+)
+
+
 @settings(max_examples=150, deadline=None)
-@given(word_st, st.lists(st.one_of(word_st, st.just("")), min_size=1, max_size=8), st.sampled_from([0.0, 50.0, 80.0, 95.0]))
+@given(
+    st.one_of(word_st, odd_key_st.filter(bool)),
+    st.lists(odd_key_st, min_size=1, max_size=8),
+    st.sampled_from([0.0, 50.0, 80.0, 95.0]),
+)
 def test_key_index_vector_bound_matches_scalar(term, keys, cutoff):
     # the numpy-batched bound must equal the scalar bound per key (so the
-    # vectorized prune inherits the scalar soundness proof), and the
+    # vectorized prune inherits the scalar soundness proof), also after a
+    # pickle round trip (the index rides the resolver broadcast), and the
     # pruned extract_one must be bit-identical to the unpruned one
+    import pickle
+
     from phenoqc_spark.ontology.fuzzy import (
         _str_stats,
         _wratio_upper_bound,
@@ -155,6 +183,8 @@ def test_key_index_vector_bound_matches_scalar(term, keys, cutoff):
             assert vb[i] == -1.0
         else:
             assert abs(vb[i] - _wratio_upper_bound(_str_stats(term), _str_stats(k))) < 1e-9
+    shipped = pickle.loads(pickle.dumps(ki))
+    assert shipped.bounds(_str_stats(term)).tolist() == vb.tolist()
     assert extract_one(term, keys, cutoff) == extract_one(term, keys, cutoff, key_stats=ki)
 
 
