@@ -126,14 +126,13 @@ def _kg_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from phenoqc_spark.operators import triples as T
+    from phenoqc_spark.pipeline import build_triples
 
-    recs = _kg_records(spark, sf_dir)
     bc = spark.sparkContext.broadcast(_resolver())
-    terms = T.terms_long(recs, ["PrimaryPhenotype", "DiseaseCode"], [])
-    links = T.resolve_vocab(terms, bc)
-    linked = T.link_terms(terms, links)
-    return T.triples(linked).select("subj", "pred", "obj").orderBy("subj", "pred", "obj")
+    trip, _ = build_triples(
+        _kg_records(spark, sf_dir), bc, ["PrimaryPhenotype", "DiseaseCode"], []
+    )
+    return trip.select("subj", "pred", "obj").orderBy("subj", "pred", "obj")
 
 
 _KG_ORACLE_VALUES = ",\n        ".join(
@@ -380,6 +379,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         validation as V,
     )
     from phenoqc_spark.operators import triples as T
+    from phenoqc_spark.pipeline import build_triples
 
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
@@ -407,13 +407,8 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ],
         )
         bc = spark.sparkContext.broadcast(_resolver())
-        terms = T.terms_long(recs, list(PHENO_POOLS), [])
-        links = T.resolve_vocab(terms, bc)
-        return (
-            T.triples(T.link_terms(terms, links))
-            .select("subj", "pred", "obj")
-            .orderBy("subj", "pred", "obj")
-        )
+        trip, _ = build_triples(recs, bc, list(PHENO_POOLS), [])
+        return trip.select("subj", "pred", "obj").orderBy("subj", "pred", "obj")
 
     q["kg_triples_full"] = kg_triples_full
 
@@ -436,13 +431,8 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ],
         )
         bc = spark.sparkContext.broadcast(_resolver())
-        terms = T.terms_long(recs, list(_KG_UNI_POOLS), [])
-        links = T.resolve_vocab(terms, bc)
-        return (
-            T.triples(T.link_terms(terms, links))
-            .select("subj", "pred", "obj")
-            .orderBy("subj", "pred", "obj")
-        )
+        trip, _ = build_triples(recs, bc, list(_KG_UNI_POOLS), [])
+        return trip.select("subj", "pred", "obj").orderBy("subj", "pred", "obj")
 
     q["kg_triples_unicode"] = kg_triples_unicode
 
@@ -464,13 +454,8 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.element_at(arr, (F.col("doc_id") % 4 + 1).cast("int")).alias("ObservedFeatures"),
         )
         bc = spark.sparkContext.broadcast(_resolver())
-        terms = T.terms_long(recs, [], ["ObservedFeatures"])
-        links = T.resolve_vocab(terms, bc)
-        return (
-            T.triples(T.link_terms(terms, links))
-            .select("subj", "pred", "obj")
-            .orderBy("subj", "pred", "obj")
-        )
+        trip, _ = build_triples(recs, bc, [], ["ObservedFeatures"])
+        return trip.select("subj", "pred", "obj").orderBy("subj", "pred", "obj")
 
     q["kg_triples_array"] = kg_triples_array
 

@@ -114,8 +114,7 @@ def main() -> None:
     from phenoqc_spark.ontology import TermResolver
     from phenoqc_spark.operators import resume as R
     from phenoqc_spark.operators import triples as T
-    from phenoqc_spark.operators.validation import schema_violation_flag
-    from phenoqc_spark.pipeline import extract_records
+    from phenoqc_spark.pipeline import build_triples, extract_records
     from phenoqc_spark.session import get_spark
 
     spark = get_spark("kg-job")
@@ -147,9 +146,7 @@ def main() -> None:
     # part_key rides the projection — never a fact-side re-join (the join
     # on url would shuffle the whole fact table just to recover one column)
     records = extract_records(keyed, keep=["part_key"])
-    terms = T.terms_long(records)
-    links = T.resolve_vocab(terms, resolver_bc)
-    trip = T.triples(T.link_terms(terms, links))
+    trip, _ = build_triples(records, resolver_bc)
     trip_keyed = trip.withColumn(
         "part_key", F.pmod(F.xxhash64(F.col("provenance")), F.lit(args.buckets)).cast("int")
     )

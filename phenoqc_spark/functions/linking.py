@@ -1,13 +1,13 @@
-"""Entity-linking over *distinct* terms (the engine's J1 join).
+"""Entity linking against the broadcast ontology dictionaries.
 
-Scale design (SURVEY.md §2.3/§4.2): resolution cost is paid once per
-distinct normalized surface form — mirroring the reference's per-chunk
-``dropna().unique()`` (reference: src/phenoqc/batch_processing.py:594) but
-globally.  The ontology dictionaries ride a Spark broadcast variable
-(never shuffled); the resolved vocabulary joins back to the fact side as a
-broadcast hash join, so the 100 TB fact table is never shuffled for
-linking.  Hub-term skew therefore collapses map-side in the partial
-aggregate of ``distinct`` and never reaches a skewed shuffle join.
+``link_terms_inline`` is the fact path's link hop: one ``mapInPandas``
+over the term rows that resolves each batch's unique terms through the
+resolver's per-executor memo — the reference's per-chunk
+``dropna().unique()`` (reference: src/phenoqc/batch_processing.py:594) —
+and fans the links back out with a pandas merge.  The dictionaries ride
+a Spark broadcast variable and the fact side is never shuffled for
+linking.  ``link_distinct_terms`` resolves an already-distinct term
+column, for vocabulary-sized outputs (mapping stats, the wide QC table).
 """
 
 from __future__ import annotations
@@ -77,16 +77,11 @@ def link_terms_inline(
 ) -> DataFrame:
     """Single-pass linking: resolve per batch with a per-executor memo cache.
 
-    The vocab-distinct + broadcast-join plan reads the expensive upstream
-    (extract + parse + normalize) twice — once for the vocabulary branch,
-    once for the fact branch.  This operator fuses linking into the fact
-    pass: each Arrow batch resolves its terms through
-    ``TermResolver.map_term_cached`` (per-executor memo), which is exactly
-    the reference's per-chunk ``unique()`` contract
-    (batch_processing.py:594) — hub terms hit the cache, the fact side is
-    read once and never shuffled.  Prefer this when the vocabulary is
-    dictionary-bounded; use the vocab path when terms are unbounded and the
-    upstream is cheap to re-scan (e.g. a materialized staging table).
+    Each Arrow batch resolves its unique terms through
+    ``TermResolver.map_term_cached`` (per-executor memo), which is the
+    reference's per-chunk ``unique()`` contract
+    (batch_processing.py:594): hub terms hit the cache, and the fact side
+    is read once and never shuffled.
 
     Input: (…, term_norm); output: input columns + (ontology, term_id,
     tier, score), matched rows only.  ``drop_input_cols`` names input

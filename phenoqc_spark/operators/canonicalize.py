@@ -3,10 +3,9 @@
 The reference canonicalizes 1-hop (alt_id → primary, xref → id) inside the
 dictionary (reference: src/phenoqc/mapping.py:223-262,294-313).  The engine
 generalizes to transitive same-as closure over alt/xref/custom-mapping
-edges: connected components computed with the alternating large-star /
-small-star algorithm (Kiveris et al., "Connected Components in MapReduce
-and Beyond", SoCC'14) — pure DataFrame joins/aggregations, converging in
-O(log² n) rounds.
+edges: connected components computed by min-label propagation with one
+pointer jump per round — pure DataFrame joins/aggregations, converging in
+at most diameter + 1 rounds.
 
 Component label = min(node id) lexicographically; the canonical id of a
 component is then chosen as the primary-preferred member (see
@@ -72,11 +71,12 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) with component = min member id of the node's CC.
 
-    Implementation: min-label propagation expressed as alternating
-    large-star/small-star operations on the edge list.  Each round is two
-    shuffles (groupBy min + join) and ends in one count of the changed
-    labels.  At ``max_iter`` it warns (``RuntimeWarning``) and returns the
-    labels it has, which may split a component.
+    Implementation: min-label propagation over the symmetric edge list.
+    Each round takes every node's minimum neighbour label (join + groupBy
+    min), then one pointer jump (comp ← comp's comp, a self-join of the
+    labels), and ends in one count of the changed labels.  At ``max_iter``
+    it warns (``RuntimeWarning``) and returns the labels it has, which may
+    split a component.
     """
     # undirected: keep each edge both ways, self-loops dropped.  One
     # distinct over the symmetric union suffices — a pre-distinct on the

@@ -4,18 +4,15 @@ The reference adds one ``{ONTO}_ID`` column per (phenotype column ×
 ontology) (reference: src/phenoqc/batch_processing.py:594-620); exploded to
 long format that is exactly a (subj, pred, obj) set (SURVEY.md §1.1.5).
 
-Scale shape (SURVEY.md §4.3):
+Fact path (SURVEY.md §4.3), composed by ``pipeline.build_triples``:
 
-    pages ──explode──> (url, sid, column, term)      [fact side, NEVER shuffled]
-                │ normalize (Arrow UDF)
-                ├─ distinct(term_norm)               [vocab side: map-side partial
-                │      │                              dedup collapses hub terms]
-                │      └─ link UDF (broadcast dicts) [vocab-sized work]
-                └─ broadcast join back on term_norm  [no shuffle of fact side]
+    records ──explode──> (url, sid, column, term)   [terms_long, ONE Generate]
+        └─ normalize + link per batch (mapInPandas) [broadcast dicts,
+           per-executor memo: hub terms are cache hits; no join-back]
+        └─ triples: (subj, pred, obj) set dedup     [the one exchange]
 
-The distinct+broadcast-back pattern is what makes hub-term skew a non-issue:
-duplicates collapse in the partial aggregate on the map side, and the big
-side's partitioning is preserved end-to-end.
+``resolve_vocab`` (distinct normalized terms → links) serves only
+vocabulary-sized outputs: ``mapping_stats`` and ``map_wide``.
 """
 
 from __future__ import annotations
@@ -90,23 +87,6 @@ def terms_long(
     return out
 
 
-def salted_distinct(df: DataFrame, column: str, buckets: int = 64) -> DataFrame:
-    """Two-phase distinct for skew-heavy keys (SURVEY.md §4.2.1).
-
-    Spark's HashAggregate already collapses duplicates map-side, which
-    handles hub-key skew for `distinct()` in most plans; this explicit
-    two-phase variant additionally guarantees that no single *reducer*
-    partition owns a hub key's residue: phase 1 dedups on
-    (salt = xxhash64(key) % buckets, key), phase 2 dedups the salted
-    survivors.  Use when a downstream stage must repartition by the key
-    and the key distribution is pathological.
-    """
-    salted = df.select(
-        F.pmod(F.xxhash64(F.col(column)), F.lit(buckets)).alias("_salt"), F.col(column)
-    ).dropDuplicates(["_salt", column])
-    return salted.select(column).dropDuplicates([column])
-
-
 def resolve_vocab(terms: DataFrame, resolver_bc) -> DataFrame:
     """Distinct normalized terms → (term_norm, ontology, term_id, tier, score).
 
@@ -119,21 +99,11 @@ def resolve_vocab(terms: DataFrame, resolver_bc) -> DataFrame:
     return link_distinct_terms(vocab, resolver_bc)
 
 
-def link_terms(
-    terms: DataFrame,
-    links: DataFrame,
-    broadcast_vocab: bool = True,
-) -> DataFrame:
-    """Join resolved links back to the fact side.
-
-    The resolved-vocabulary side is broadcast — at 10^12 docs the fact side
-    is never shuffled for linking.  Set ``broadcast_vocab=False`` when the
-    vocabulary outgrows the driver; AQE then plans the shuffle join and the
-    prior distinct has already collapsed hub-term skew.
-    """
+def link_terms(terms: DataFrame, links: DataFrame) -> DataFrame:
+    """Broadcast-join the matched rows of ``resolve_vocab`` back onto
+    (…, term_norm) term rows."""
     matched = links.filter(F.col("term_id").isNotNull())
-    matched = F.broadcast(matched) if broadcast_vocab else matched
-    return terms.join(matched, "term_norm", "inner")
+    return terms.join(F.broadcast(matched), "term_norm", "inner")
 
 
 def triples(linked: DataFrame) -> DataFrame:

@@ -5,12 +5,13 @@ src/phenoqc/batch_processing.py:240-1031) as one lazy Catalyst plan:
 
     scan pages  (column-pruned; partition pruning on warc_ts at scale)
     → filter lang='en'                          (codegen)
-    → extract_text(html)                        (Arrow UDF, byte-identical)
+    → extract text from html                    (JVM expression)
     → parse record (str_to_map)                 (JVM)
     → typed projection (try_cast)               (JVM)
-    → terms explode → normalize → distinct → link (broadcast dicts)
-    → triples explode-back                      (broadcast join)
-    → per-partition audit metrics               (partial aggregation)
+    → terms explode                             (ONE Generate)
+    → normalize + link, batch-unique terms      (ONE mapInPandas; broadcast
+                                                 dicts, per-executor memo)
+    → (subj, pred, obj) set dedup               (the one exchange)
 
 The per-file ProcessPoolExecutor boundary becomes task parallelism over
 partitions; checkpoint-resume is handled by the audit/status layer
@@ -55,22 +56,15 @@ def extract_records(
 ) -> DataFrame:
     """pages → typed record DataFrame (url, warc_ts, SampleID, …).
 
-    ``jvm_extract=True`` (default since r6) extracts with the pure-JVM
-    :func:`extract_text_expr`: the html bytes never cross the JVM↔Python
-    Arrow boundary at all (guide §4.1 — the strongest form of "pass only
-    the columns the function needs" is passing nothing).  Round-4
-    measurements preferred the Arrow UDF inside the fused pipeline
-    (Python workers pipelined the decode while JVM threads ran
-    parse/link), but after the r6 link-stage optimization shrank the
-    Python side the balance flipped: 5.07 s (Arrow) vs 4.28 s (JVM) for
-    the full 1M-page triples build at local[32].  Both paths are
-    row-level differentially EQUAL on the 1M-page corpus (bit_xor over
-    every record and triple column, re-verified r6).  Pass
-    ``jvm_extract=False`` for corpora that can contain invalid UTF-8,
-    where Java binary→string casting and Python ``decode('utf-8',
-    'replace')`` may emit different U+FFFD runs.  ``keep`` carries extra
-    input columns (e.g. a resume ``part_key``) through the projection so
-    callers never need a fact-side re-join to recover them.
+    ``jvm_extract=True`` extracts with the pure-JVM
+    :func:`extract_text_expr`, so the html bytes never cross the
+    JVM↔Python Arrow boundary; ``jvm_extract=False`` uses the Arrow UDF.
+    Both give the same records on valid UTF-8.  Pass ``jvm_extract=False``
+    for corpora that can contain invalid UTF-8, where Java binary→string
+    casting and Python ``decode('utf-8', 'replace')`` may emit different
+    U+FFFD runs.  ``keep`` carries extra input columns (e.g. a resume
+    ``part_key``) through the projection so callers never need a
+    fact-side re-join to recover them.
     """
     from .functions.text import extract_text_expr
 
@@ -97,19 +91,25 @@ def extract_records(
     return df.select(*cols)
 
 
-def build_triples(records: DataFrame, resolver_bc):
-    """records → (triples_df, terms_df).
+def build_triples(
+    records: DataFrame,
+    resolver_bc,
+    pheno_columns: list[str] | None = None,
+    array_columns: list[str] | None = None,
+):
+    """records → (triples_df, terms_df); the engine's one fact path.
 
-    Single fact-side pass with a per-executor memo cache — the upstream
-    extract/parse runs exactly once.  Normalization is fused into the link
-    UDF, so the fact path has ONE Python stage (extraction is JVM by
-    default); the raw term string is dropped from the Arrow return path
-    (term_norm is what everything downstream keys on).  ``terms_df`` is
-    the un-normalized term rows.
+    Every triple builder calls this.  The upstream runs once: the term
+    rows feed one ``mapInPandas`` that normalizes and links each batch's
+    unique terms through the per-executor memo, with no vocabulary branch
+    and no join-back.  The raw term is dropped from the Arrow return
+    path.  ``pheno_columns``/``array_columns`` are
+    :func:`~phenoqc_spark.operators.triples.terms_long`'s; ``terms_df``
+    is the un-normalized term rows.
     """
     from .functions.linking import link_terms_inline
 
-    terms = T.terms_long(records, normalize=False)
+    terms = T.terms_long(records, pheno_columns, array_columns, normalize=False)
     linked = link_terms_inline(
         terms, resolver_bc, normalize=True, drop_input_cols=("term",)
     )

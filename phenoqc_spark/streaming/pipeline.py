@@ -6,18 +6,20 @@ the same extract→parse→link composition runs unchanged as a streaming
 query: ``readStream`` over a pages source → per-micro-batch linking with
 the broadcast resolver → ``writeStream`` (append).
 
-Because the vocabulary ``distinct`` is a global aggregate, the streaming
-path links per micro-batch via ``foreachBatch`` — each batch's distinct
-terms are resolved against the broadcast dictionaries exactly like the
-reference's per-chunk ``unique()`` (batch_processing.py:594).
+Linking runs per micro-batch inside ``foreachBatch`` through the same
+``pipeline.build_triples`` fact path as the batch job.  Its
+(subj, pred, obj) set dedup is a global aggregate; inside
+``foreachBatch`` it runs as a plain batch aggregate over one micro-batch
+instead of holding unbounded streaming dedup state.  Each batch's unique
+terms resolve against the broadcast dictionaries like the reference's
+per-chunk ``unique()`` (batch_processing.py:594).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import triples as T
-from ..pipeline import extract_records
+from ..pipeline import build_triples, extract_records
 
 
 def stream_triples(
@@ -36,10 +38,7 @@ def stream_triples(
     resolver_bc = spark.sparkContext.broadcast(resolver)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        records = extract_records(batch_df)
-        terms = T.terms_long(records)
-        links = T.resolve_vocab(terms, resolver_bc)
-        trip = T.triples(T.link_terms(terms, links))
+        trip, _ = build_triples(extract_records(batch_df), resolver_bc)
         trip.write.mode("append").parquet(output_path)
 
     writer = (

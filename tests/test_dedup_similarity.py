@@ -341,6 +341,7 @@ def test_frame_sample_plan(spark):
 
 def test_streaming_triples(spark, resolver, tmp_path):
     from phenoqc_spark import pages as PG
+    from phenoqc_spark.pipeline import run_pipeline
     from phenoqc_spark.streaming import stream_triples
 
     src = str(tmp_path / "pages_in")
@@ -351,9 +352,12 @@ def test_streaming_triples(spark, resolver, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     query = stream_triples(spark, stream, resolver, out, ckpt)
     query.awaitTermination(120)
-    got = spark.read.parquet(out)
-    assert got.count() > 0
-    assert set(got.columns) >= {"subj", "pred", "obj"}
+    # the streamed facts are exactly the batch pipeline's on the same pages
+    cols = ["subj", "pred", "obj"]
+    got = {tuple(r) for r in spark.read.parquet(out).select(*cols).collect()}
+    batch = run_pipeline(spark, spark.read.parquet(src), resolver)["triples"]
+    want = {tuple(r) for r in batch.select(*cols).collect()}
+    assert want and got == want
 
 
 def test_corpus_source_stats(spark):

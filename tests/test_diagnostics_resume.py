@@ -71,17 +71,16 @@ def test_kill_and_resume(spark, resolver, tmp_path):
     from phenoqc_spark import pages as PG
     from phenoqc_spark.operators import resume as R
     from phenoqc_spark.operators import triples as T
-    from phenoqc_spark.pipeline import extract_records
+    from phenoqc_spark.pipeline import build_triples, extract_records
 
     pages = PG.generate_pages(spark, 300, partitions=4)
     keyed = R.with_part_key(pages, n_buckets=8)
     bc = spark.sparkContext.broadcast(resolver)
 
     def run(filtered, run_id):
+        # mirrors jobs/run_kg_job.py
         records = extract_records(filtered, keep=["part_key"])
-        terms = T.terms_long(records)
-        links = T.resolve_vocab(terms, bc)
-        trip = T.triples(T.link_terms(terms, links))
+        trip, _ = build_triples(records, bc)
         trip_keyed = trip.withColumn(
             "part_key", F.pmod(F.xxhash64("provenance"), F.lit(8)).cast("int")
         )
@@ -97,7 +96,9 @@ def test_kill_and_resume(spark, resolver, tmp_path):
     assert remaining.select("part_key").distinct().count() == 4
     run(remaining, "attempt2")
 
-    # full rerun from scratch must equal resumed result (idempotence)
+    # full rerun from scratch must equal resumed result (idempotence); the
+    # expected set is built by the vocab chain, so this also checks inline
+    # linking against distinct-vocabulary linking across the crash
     expected_records = extract_records(keyed, keep=["part_key"])
     terms = T.terms_long(expected_records)
     links = T.resolve_vocab(terms, bc)

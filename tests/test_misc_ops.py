@@ -505,15 +505,6 @@ def test_range_join_matches_bruteforce(spark):
     assert (pts[0][0], 200) in got  # inclusive upper boundary
 
 
-def test_salted_distinct(spark):
-    from phenoqc_spark.operators.triples import salted_distinct
-
-    rows = [("hub",)] * 500 + [(f"t{i}",) for i in range(20)]
-    df = spark.createDataFrame(rows, "term_norm string").repartition(8)
-    out = sorted(r.term_norm for r in salted_distinct(df, "term_norm").collect())
-    assert len(out) == 21 and "hub" in out
-
-
 def test_map_wide_reference_shape(spark, resolver):
     from phenoqc_spark.operators.triples import map_wide
 

@@ -6,6 +6,7 @@ cannot slip in silently."""
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -42,7 +43,7 @@ def test_kg_path_arrow_extract_variant(spark, resolver):
     """jvm_extract=False keeps the Arrow-UDF extraction (the option for
     corpora that can contain invalid UTF-8, where Java and Python decode
     replacement runs can differ) and produces the identical triple set;
-    the JVM expression is the default since r6 (see extract_records)."""
+    the JVM expression is the default (see extract_records)."""
     from phenoqc_spark import pages as PG
     from phenoqc_spark.pipeline import build_triples, extract_records
 
@@ -55,6 +56,26 @@ def test_kg_path_arrow_extract_variant(spark, resolver):
     txt_arrow = plan_text(arrow)
     assert "ArrowEvalPython" in txt_arrow, txt_arrow
     assert sorted(map(tuple, arrow.collect())) == sorted(map(tuple, jvm.collect()))
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["kg_triples_exact", "kg_triples_full", "kg_triples_unicode", "kg_triples_array"],
+)
+def test_kg_triples_entries_link_inline(spark, sf_dir, name):
+    """The registry's triple builders take the one fact path: one
+    explode, one Python hop (the link mapInPandas), no normalize UDF and
+    no vocabulary branch joined back onto the fact side."""
+    import re
+
+    import __spark_entry__ as E
+
+    txt = plan_text(E._all_queries()[name](spark, sf_dir))
+    assert len(set(re.findall(r"Generate \((\d+)\)", txt))) == 1, txt
+    assert "ArrowEvalPython" not in txt, txt
+    assert len(set(re.findall(r"MapInPandas \((\d+)\)", txt))) == 1, txt
+    assert "BroadcastExchange" not in txt, txt
+    assert "Join" not in txt, txt
 
 
 def test_scan_pushdown_and_pruning(spark, sf_dir):
