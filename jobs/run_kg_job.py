@@ -7,7 +7,8 @@
 Replaces the reference CLI (reference: src/phenoqc/cli.py:202-292 +
 batch_processing.py:1034-1209): config + ontologies load on the driver,
 dictionaries broadcast, one lazy DAG per run, per-part_key audit rows, and
-``--resume`` skips completed buckets (idempotent partition overwrite).
+``--resume`` skips completed buckets (idempotent partition overwrite) and
+writes nothing when every bucket is done.
 """
 
 from __future__ import annotations
@@ -138,10 +139,8 @@ def main() -> None:
     audit_path = os.path.join(args.out, "audit")
     triples_path = os.path.join(args.out, "triples")
 
-    keyed = R.with_part_key(pages, args.buckets)
-    if args.resume:
-        done = R.completed_part_keys(spark, audit_path)
-        keyed = R.filter_resumable(keyed, done)
+    done = R.completed_part_keys(spark, audit_path) if args.resume else None
+    keyed = R.filter_resumable(R.with_part_key(pages, args.buckets), done)
 
     # part_key rides the projection — never a fact-side re-join (the join
     # on url would shuffle the whole fact table just to recover one column)
@@ -152,9 +151,15 @@ def main() -> None:
     )
 
     t0 = time.time()
-    R.write_triples_idempotent(trip_keyed, triples_path)
-    metrics = R.partition_metrics(records, trip_keyed)
-    R.append_audit(spark, audit_path, run_id, metrics)
+    # every bucket already done: nothing to write or audit
+    all_done = done is not None and (
+        done.where(F.col("part_key").between(0, args.buckets - 1)).count()
+        == args.buckets
+    )
+    if not all_done:
+        R.write_triples_idempotent(trip_keyed, triples_path)
+        metrics = R.partition_metrics(records, trip_keyed)
+        R.append_audit(spark, audit_path, run_id, metrics)
     n = spark.read.parquet(triples_path).count()
     graph_stats_path = None
     if args.graph_stats:

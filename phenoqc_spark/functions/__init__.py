@@ -1,11 +1,9 @@
-from .text import extract_text, normalize_terms, parse_records, record_field
+from .text import extract_text, normalize_terms
 from .linking import link_distinct_terms, LINK_SCHEMA
 
 __all__ = [
     "extract_text",
     "normalize_terms",
-    "parse_records",
-    "record_field",
     "link_distinct_terms",
     "LINK_SCHEMA",
 ]

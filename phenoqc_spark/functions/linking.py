@@ -83,12 +83,13 @@ def link_terms_inline(
     (batch_processing.py:594): hub terms hit the cache, and the fact side
     is read once and never shuffled.
 
-    Input: (…, term_norm); output: input columns + (ontology, term_id,
-    tier, score), matched rows only.  ``drop_input_cols`` names input
-    columns to OMIT from the yielded frame (guide §4: every column
-    crossing the Python→JVM boundary costs Arrow transfer; the pipeline
-    drops the raw ``term`` once ``term_norm`` replaces it downstream —
-    measured 2.35 → 2.15 s on the 1M-page linked stage).
+    Input: (…, term_norm), or (…, term) with ``normalize=True``, which
+    normalizes each batch's unique surface forms first; output: input
+    columns + (ontology, term_id, tier, score), matched rows only.
+    ``drop_input_cols`` names input columns to OMIT from the yielded
+    frame: every column crossing the Python→JVM boundary costs Arrow
+    transfer, so the fact path drops the raw ``term`` once ``term_norm``
+    replaces it.
     """
     drop = set(drop_input_cols)
     out_fields = ", ".join(
@@ -98,8 +99,7 @@ def link_terms_inline(
     )
     in_cols = [f.name for f in terms.schema.fields if f.name not in drop]
     if normalize:
-        # normalization fused here (one fewer chained Python stage on the
-        # fact path: JVM parse → this single Arrow hop)
+        # normalization fused here: the fact path has one Python stage
         out_fields += ", term_norm string"
         in_cols = in_cols + ["term_norm"]
     schema = f"{out_fields}, ontology string, term_id string, tier string, score double"
@@ -112,10 +112,9 @@ def link_terms_inline(
         for pdf in batches:
             if normalize:
                 # normalize batch-UNIQUE surface forms and map back (term
-                # columns are Zipfian; the 7-pass regex chain was running
-                # over every row — measured 4.04 -> 3.45 s on the 1M-page
-                # linked stage).  NaN terms map to NaN, exactly as the
-                # full-column normalize produced.
+                # columns are Zipfian, so the regex chain runs once per
+                # surface form, not per row).  NaN terms map to NaN, exactly
+                # as a full-column normalize would.
                 uniq_terms = pdf["term"].dropna().unique()
                 norm_map = pd.Series(
                     normalize_series(pd.Series(uniq_terms, dtype=object)).values,

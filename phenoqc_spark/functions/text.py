@@ -1,14 +1,15 @@
-"""Arrow pandas UDFs for page-level text processing.
+"""Page-level text processing: Arrow pandas UDFs and SQL expression text.
 
 All per-row Python in the engine is vectorized through Arrow batches
 (BASELINE.json input_hint: "no per-row Python") — these are Series→Series
-pandas UDFs, JVM↔Python transfer is columnar.
+pandas UDFs, JVM↔Python transfer is columnar.  JVM-side expressions are
+built as SQL text (one driver call per projection, not one per Column
+node); ``sql_ident``/``sql_string`` quote every name spliced into it.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
@@ -55,17 +56,15 @@ def extract_text(html: pd.Series) -> pd.Series:
     return out
 
 
-def extract_text_expr(col):
-    """JVM twin of :func:`extract_text` — the default extraction path.
+def extract_text_expr(col: str) -> str:
+    """JVM twin of :func:`extract_text`, as SQL expression text over the
+    binary column ``col``; the default extraction path.
 
     For the conforming wrapper (``<html><body><p>…</p></body></html>``,
-    ASCII, so character offsets equal byte offsets) this is a pure
-    codegen ``substring``; non-conforming rows fall back to the same
-    ``<[^>]*>`` tag-strip as the UDF, applied to the decoded string.
-    Measured differentially equal to the Arrow UDF on 1M generated pages
-    (0 mismatched rows) and 1.01 s → 0.60 s for the extract scan — and,
-    more importantly at scale, the html bytes never cross the JVM↔Python
-    Arrow boundary at all.
+    ASCII, so character offsets equal byte offsets) this is a codegen
+    ``substr``; non-conforming rows fall back to the same ``<[^>]*>``
+    tag-strip as the UDF, applied to the decoded string.  The html bytes
+    never cross the JVM↔Python Arrow boundary.
 
     Byte-parity caveat (why the UDF remains available): for INVALID
     UTF-8, Java's binary→string cast and Python's ``decode('utf-8',
@@ -76,14 +75,28 @@ def extract_text_expr(col):
     """
     prefix, suffix = HTML_PREFIX.decode(), HTML_SUFFIX.decode()
     pl, sl = len(prefix), len(suffix)
-    decoded = col.cast("string")
-    conforming = decoded.startswith(prefix) & decoded.endswith(suffix)
-    return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(
-        F.when(
-            conforming,
-            decoded.substr(F.lit(pl + 1), F.length(decoded) - F.lit(pl + sl)),
-        ).otherwise(F.regexp_replace(decoded, "<[^>]*>", ""))
+    c = sql_ident(col)
+    d = f"CAST({c} AS STRING)"
+    return (
+        f"CASE WHEN {c} IS NULL THEN CAST(NULL AS STRING) ELSE CASE"
+        f" WHEN startswith({d}, {sql_string(prefix)})"
+        f" AND endswith({d}, {sql_string(suffix)})"
+        f" THEN substr({d}, {pl + 1}, length({d}) - {pl + sl})"
+        f" ELSE regexp_replace({d}, '<[^>]*>', '') END END"
     )
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier: any column name,
+    dots and backticks included, refers to that one top-level column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(value: str) -> str:
+    """``value`` as a single-quoted SQL string literal, under the default
+    backslash-escape parsing (``spark.sql.parser.escapedStringLiterals``
+    off)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 @pandas_udf(StringType())
@@ -93,17 +106,3 @@ def normalize_terms(terms: pd.Series) -> pd.Series:
 
     return normalize_series(terms)
 
-
-def parse_records(df, text_col: str = "text"):
-    """Parse ``key: value`` line records embedded in page text — fully
-    JVM-side (``str_to_map``), no Python.
-
-    Returns the input DataFrame plus a ``rec`` map column; empty values
-    become NULL downstream via ``nullif``.
-    """
-    return df.withColumn("rec", F.expr(f"str_to_map({text_col}, '\n', ': ')"))
-
-
-def record_field(name: str):
-    """NULL-safe accessor for a parsed record field."""
-    return F.nullif(F.col("rec").getItem(name), F.lit(""))

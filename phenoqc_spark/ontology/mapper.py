@@ -217,9 +217,10 @@ class TermResolver:
     def map_term_cached(self, term_norm: str) -> Dict[str, Optional[str]]:
         """Per-executor memoized resolution over already-normalized terms.
 
-        The engine deduplicates terms with a salted distinct *before* the UDF
-        (SURVEY.md §4.2), so this cache only absorbs residual within-batch
-        repeats.
+        ``link_terms_inline`` calls it once per batch-unique term, so the
+        memo absorbs repeats across batches and tasks on one executor (hub
+        terms resolve once); ``link_distinct_terms`` calls it over an
+        already-distinct vocabulary.  Cleared at ``_memo_max`` entries.
         """
         hit = self._cache.get(term_norm)
         if hit is None:

@@ -22,7 +22,7 @@ from typing import List
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.linking import link_distinct_terms
-from ..functions.text import normalize_terms
+from ..functions.text import normalize_terms, sql_ident, sql_string
 
 PHENO_COLUMNS = [
     "PrimaryPhenotype",
@@ -43,47 +43,40 @@ def terms_long(
 ) -> DataFrame:
     """(url, sample_id, column, term, term_norm) from wide phenotype columns.
 
-    Scalar columns stack via an inline array-of-structs explode; array
-    columns (ObservedFeatures) explode element-wise.  All JVM-side except
-    the NFKC normalization (Arrow pandas UDF).
+    Scalar and array columns (ObservedFeatures, element-wise) feed ONE
+    combined ``array<struct<column, term>>`` and ONE Generate: a
+    ``unionByName`` of per-kind explodes would re-run the upstream extract
+    once per branch.  All JVM-side except the NFKC normalization (Arrow
+    pandas UDF).
     """
     pheno_columns = PHENO_COLUMNS if pheno_columns is None else pheno_columns
     array_columns = ARRAY_COLUMNS if array_columns is None else array_columns
-    base_cols = [F.col(url_col).alias("url"), F.col(id_col).alias("sample_id")]
 
-    # ONE combined array<struct<column,term>> per row, ONE Generate:
-    # a unionByName of scalar-explode and array-explode branches would scan
-    # (and re-run extract_text on) the upstream once per branch — measured
-    # as a 2× cost of the dominant Python stage on the fact path.
+    def kv(name, term):
+        return f"struct({sql_string(name)} AS `column`, {term} AS term)"
+
     pieces = []
     if pheno_columns:
-        pieces.append(
-            F.array(
-                *[
-                    F.struct(F.lit(c).alias("column"), F.col(c).alias("term"))
-                    for c in pheno_columns
-                ]
-            )
-        )
-    def _kv(col_name):
-        # factory, not a default arg: pyspark treats 2-param lambdas as
-        # (element, index) functions
-        return lambda x: F.struct(F.lit(col_name).alias("column"), x.alias("term"))
-
+        pieces.append(f"array({', '.join(kv(c, sql_ident(c)) for c in pheno_columns)})")
     for c in array_columns:
         pieces.append(
-            F.transform(F.coalesce(F.col(c), F.array().cast("array<string>")), _kv(c))
+            f"transform(coalesce({sql_ident(c)}, CAST(array() AS array<string>)),"
+            f" x -> {kv(c, 'x')})"
         )
     if not pieces:
         raise ValueError("terms_long needs at least one phenotype or array column")
-    kvs = pieces[0] if len(pieces) == 1 else F.concat(*pieces)
+    kvs = pieces[0] if len(pieces) == 1 else f"concat({', '.join(pieces)})"
     out = (
-        records.select(*base_cols, F.explode(kvs).alias("kv"))
-        .select("url", "sample_id", "kv.column", "kv.term")
-        .filter(F.col("term").isNotNull())
+        records.selectExpr(
+            f"{sql_ident(url_col)} AS url",
+            f"{sql_ident(id_col)} AS sample_id",
+            f"explode({kvs}) AS kv",
+        )
+        .selectExpr("url", "sample_id", "kv.`column`", "kv.term")
+        .where("term IS NOT NULL")
     )
     if normalize:
-        out = out.withColumn("term_norm", normalize_terms(F.col("term")))
+        out = out.withColumn("term_norm", normalize_terms("term"))
     return out
 
 
@@ -108,17 +101,14 @@ def link_terms(terms: DataFrame, links: DataFrame) -> DataFrame:
 
 def triples(linked: DataFrame) -> DataFrame:
     """(subj, pred, obj, tier, score, provenance) from linked terms."""
-    return (
-        linked.select(
-            F.concat_ws("#", F.col("url"), F.col("sample_id")).alias("subj"),
-            F.concat(F.col("column"), F.lit("->"), F.col("ontology")).alias("pred"),
-            F.col("term_id").alias("obj"),
-            F.col("tier"),
-            F.col("score"),
-            F.col("url").alias("provenance"),
-        )
-        .dropDuplicates(["subj", "pred", "obj"])
-    )
+    return linked.selectExpr(
+        "concat_ws('#', url, sample_id) AS subj",
+        "concat(`column`, '->', ontology) AS pred",
+        "term_id AS obj",
+        "tier",
+        "score",
+        "url AS provenance",
+    ).dropDuplicates(["subj", "pred", "obj"])
 
 
 def mapping_stats(terms: DataFrame, links: DataFrame) -> DataFrame:

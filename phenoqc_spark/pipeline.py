@@ -15,14 +15,16 @@ src/phenoqc/batch_processing.py:240-1031) as one lazy Catalyst plan:
 
 The per-file ProcessPoolExecutor boundary becomes task parallelism over
 partitions; checkpoint-resume is handled by the audit/status layer
-(operators/resume.py).
+(operators/resume.py).  Each JVM step is one SQL-expression call
+(``selectExpr``/``where``), so building the plan costs ~120 driver↔JVM
+round trips, not one per Column node.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .functions.text import extract_text, parse_records, record_field
+from .functions.text import extract_text, extract_text_expr, sql_ident, sql_string
 from .operators import triples as T
 
 NUMERIC_FIELDS = [
@@ -65,30 +67,30 @@ def extract_records(
     U+FFFD runs.  ``keep`` carries extra input columns (e.g. a resume
     ``part_key``) through the projection so callers never need a
     fact-side re-join to recover them.
-    """
-    from .functions.text import extract_text_expr
 
-    df = pages.filter(F.col("lang") == lang)
-    extractor = (
-        extract_text_expr(F.col("html")) if jvm_extract else extract_text(F.col("html"))
+    The record parse is JVM-side: ``str_to_map`` over the ``key: value``
+    lines, empty values as NULL.  Numeric fields use ``try_cast``, not
+    ``cast``: under ANSI one malformed number in web text would kill the
+    job; the reference coerces to NaN (``pd.to_numeric(errors='coerce')``,
+    batch_processing.py).
+    """
+    extractor = F.expr(extract_text_expr("html")) if jvm_extract else extract_text("html")
+    df = (
+        pages.where(f"lang = {sql_string(lang)}")
+        .withColumn("extracted_text", extractor)
+        .selectExpr("*", "str_to_map(extracted_text, '\\n', ': ') AS rec")
     )
-    df = df.withColumn("extracted_text", extractor)
-    df = parse_records(df, "extracted_text")
-    cols = [F.col("url"), F.col("warc_ts"), F.col("extracted_text")]
-    cols += [F.col(c) for c in (keep or [])]
-    for name in STRING_FIELDS:
-        cols.append(record_field(name).alias(name))
-    for name in NUMERIC_FIELDS:
-        # try_cast, not cast: under ANSI a single malformed numeric field
-        # in web text would kill the whole job; the reference coerces to
-        # NaN (pd.to_numeric(errors='coerce'), batch_processing.py)
-        cols.append(record_field(name).try_cast("double").alias(name))
+
+    def field(name):
+        return f"nullif(rec[{sql_string(name)}], '')"
+
+    cols = ["url", "warc_ts", "extracted_text", *map(sql_ident, keep or [])]
+    cols += [f"{field(n)} AS {sql_ident(n)}" for n in STRING_FIELDS]
+    cols += [f"try_cast({field(n)} AS DOUBLE) AS {sql_ident(n)}" for n in NUMERIC_FIELDS]
     cols.append(
-        F.from_json(record_field("ObservedFeatures"), "array<string>").alias(
-            "ObservedFeatures"
-        )
+        f"from_json({field('ObservedFeatures')}, 'array<string>') AS ObservedFeatures"
     )
-    return df.select(*cols)
+    return df.selectExpr(*cols)
 
 
 def build_triples(
@@ -117,18 +119,10 @@ def build_triples(
 
 
 def run_pipeline(spark: SparkSession, pages: DataFrame, resolver) -> dict:
-    """Full DAG; returns {'triples', 'records', 'terms', 'mapping_stats'}."""
-    from .functions.text import normalize_terms as _norm_udf
-    from pyspark.sql import functions as _F
-
+    """pages → {'records', 'terms', 'triples'}, three lazy frames of one
+    plan: :func:`extract_records`, then :func:`build_triples`'s term rows
+    (un-normalized) and triples.  Building them runs no Spark job."""
     resolver_bc = spark.sparkContext.broadcast(resolver)
     records = extract_records(pages)
     trip, terms = build_triples(records, resolver_bc)
-    terms_n = terms.withColumn("term_norm", _norm_udf(_F.col("term")))
-    return {
-        "records": records,
-        "triples": trip,
-        "terms": terms_n,
-        # lazy plan — only pays the vocab pass if actually collected
-        "mapping_stats": T.mapping_stats(terms_n, T.resolve_vocab(terms_n, resolver_bc)),
-    }
+    return {"records": records, "terms": terms, "triples": trip}

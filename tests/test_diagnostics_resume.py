@@ -108,6 +108,54 @@ def test_kill_and_resume(spark, resolver, tmp_path):
     assert got.exceptAll(expected).count() == 0 and expected.exceptAll(got).count() == 0
 
 
+def test_resume_with_every_bucket_done_writes_nothing(spark, resolver, onto_dir, tmp_path):
+    """``run_kg_job --resume`` with every part_key bucket done appends no
+    audit rows, leaves every triple file as it was and still reports the
+    triple total."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from phenoqc_spark import pages as PG
+    from phenoqc_spark.operators import resume as R
+    from phenoqc_spark.pipeline import build_triples, extract_records
+
+    out = tmp_path / "kg"
+    records = extract_records(
+        R.with_part_key(PG.generate_pages(spark, 200, partitions=2), n_buckets=4),
+        keep=["part_key"],
+    )
+    trip, _ = build_triples(records, spark.sparkContext.broadcast(resolver))
+    trip_keyed = trip.withColumn(
+        "part_key", F.pmod(F.xxhash64("provenance"), F.lit(4)).cast("int")
+    )
+    R.write_triples_idempotent(trip_keyed, str(out / "triples"))
+    R.append_audit(spark, str(out / "audit"), "first", R.partition_metrics(records, trip_keyed))
+    assert R.completed_part_keys(spark, str(out / "audit")).count() == 4
+    n_triples = spark.read.parquet(str(out / "triples")).count()
+
+    def snapshot():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), out), os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _, files in os.walk(out)
+            for f in files
+        )
+
+    before = snapshot()
+    proc = subprocess.run(
+        [sys.executable, "jobs/run_kg_job.py", "--generate-rows", "200",
+         "--buckets", "4", "--out", str(out), "--onto-dir", onto_dir, "--resume"],
+        capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    summary = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert summary["resumed"] and summary["triples_total"] == n_triples
+    assert snapshot() == before
+    assert spark.read.parquet(str(out / "audit")).count() == 4
+
+
 def test_merge_state_into_batches(spark, tmp_path):
     """Two job-level merges into the same state path: batch ids advance,
     cross-batch keys combine (max conf, min/max seen, summed n_obs), and

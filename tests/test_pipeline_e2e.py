@@ -55,12 +55,86 @@ def test_triples_pr_vs_ground_truth(spark, resolver):
 
 
 def test_mapping_stats_shape(spark, resolver):
+    from phenoqc_spark.operators import triples as T
+
     pages = PG.generate_pages(spark, 300, partitions=4)
-    out = run_pipeline(spark, pages, resolver)
-    stats = out["mapping_stats"].collect()
+    terms = T.terms_long(extract_records(pages))
+    links = T.resolve_vocab(terms, spark.sparkContext.broadcast(resolver))
+    stats = T.mapping_stats(terms, links).collect()
     assert {r.column for r in stats} >= {"PrimaryPhenotype", "DiseaseCode"}
     for r in stats:
         assert 0 <= r.success_rate_pct <= 100
+
+
+def test_run_pipeline_builds_in_few_driver_calls(spark, resolver, monkeypatch):
+    """Building the fact path's plan costs one driver→JVM call per
+    SQL-expression projection, not one per Column node: the whole
+    ``run_pipeline`` construction stays within 300 Py4J round trips
+    (``F.*`` Column chains for the same plan take ~2,800)."""
+    pages = PG.generate_pages(spark, 100, partitions=2)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    out = run_pipeline(spark, pages, resolver)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 300, len(calls)
+    assert sorted(out) == ["records", "terms", "triples"]
+
+
+def test_odd_column_names_give_same_triples(spark, resolver):
+    """Every caller-supplied name reaches SQL text quoted: columns named
+    with a space, a quote, a backtick, a backslash and non-ASCII letters
+    give the same triples, term column labels and carried column as the
+    same data under plain names."""
+    from phenoqc_spark.functions.linking import link_terms_inline
+    from phenoqc_spark.operators import triples as T
+
+    odd = {
+        "url": "page url",
+        "SampleID": "it's id",
+        "PrimaryPhenotype": "prim`ary",
+        "DiseaseCode": "Diagnóstico código",
+        "ObservedFeatures": "feat\\ures 'x'",
+        "text": "tëxt `'\\",
+    }
+    pages = PG.generate_pages(spark, 200, partitions=2)
+    bc = spark.sparkContext.broadcast(resolver)
+
+    def build(names):
+        n = lambda c: names.get(c, c)
+        recs = extract_records(
+            pages.withColumnRenamed("text", n("text")), keep=[n("text")]
+        ).withColumnsRenamed({c: n(c) for c in odd if c != "text"})
+        carried = recs.toDF(*[f"c{i}" for i in range(len(recs.columns))])
+        i_text, i_ext = recs.columns.index(n("text")), recs.columns.index("extracted_text")
+        assert carried.where(F.col(f"c{i_text}") != F.col(f"c{i_ext}")).count() == 0
+        terms = T.terms_long(
+            recs,
+            [n("PrimaryPhenotype"), n("DiseaseCode")],
+            [n("ObservedFeatures")],
+            id_col=n("SampleID"),
+            url_col=n("url"),
+            normalize=False,
+        )
+        labels = {r[0] for r in terms.select("column").distinct().collect()}
+        assert labels == {n("PrimaryPhenotype"), n("DiseaseCode"), n("ObservedFeatures")}
+        linked = link_terms_inline(terms, bc, normalize=True, drop_input_cols=("term",))
+        back = {v: k for k, v in names.items()}
+        rows = set()
+        for r in T.triples(linked).collect():
+            col, onto = r.pred.rsplit("->", 1)
+            rows.add((r.subj, back.get(col, col), onto, r.obj, r.provenance))
+        return rows
+
+    plain = build({})
+    assert plain
+    assert build(odd) == plain
 
 
 def test_memo_cap_keeps_links_identical(spark, onto_dir, monkeypatch):
