@@ -462,9 +462,8 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def kg_mapping_stats(spark, sf_dir):
         bc = spark.sparkContext.broadcast(_resolver())
         terms = T.terms_long(_kg_records(spark, sf_dir), ["PrimaryPhenotype", "DiseaseCode"], [])
-        links = T.resolve_vocab(terms, bc)
         return (
-            T.mapping_stats(terms, links)
+            T.mapping_stats(terms, bc)
             .select(
                 "column",
                 "ontology",
@@ -1266,7 +1265,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # corpus size) → cell assignment (JVM argmax) → probe n cells →
         # exact re-rank.  With literal centroids the whole query is
         # SQL-recomputable, so it is oracle-checked.
-        from phenoqc_spark.ivf_codebook import IVF_CODEBOOK_8x64
+        from goldens.ivf_codebook import IVF_CODEBOOK_8x64
 
         emb = load_table(spark, sf_dir, "embeddings")
         queries_df = emb.filter(F.col("vec_id") < 5).select(
@@ -1674,7 +1673,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # stage (normalize, sub-centroid argmax, lookup-table sum, rank)
         # SQL-recomputable, so the compressed-ANN path is hash-checked
         from phenoqc_spark.operators import similarity as S
-        from phenoqc_spark.pq_codebook import PQ_CODEBOOK_8x16x8
+        from goldens.pq_codebook import PQ_CODEBOOK_8x16x8
 
         emb = load_table(spark, sf_dir, "embeddings")
         codes = S.pq_encode(emb, PQ_CODEBOOK_8x16x8)
@@ -1690,7 +1689,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def emb_kmeans(spark, sf_dir):
         # distributed Lloyd k-means over the embeddings table (k=10,
         # 5 fixed rounds, md5-seeded deterministic init).  Oracle = the
-        # pinned numpy full-Lloyd twin (phenoqc_spark/kmeans_golden.py,
+        # pinned numpy full-Lloyd twin (goldens/kmeans_golden.py,
         # scripts/gen_kmeans_golden.py) — different distance arithmetic
         # (direct ||x-c||^2 vs the operator's x.c - ||c||^2/2 argmax),
         # assignment margins ~1e-3 >> float wobble, generator asserts it.
@@ -1754,7 +1753,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # fixed-iteration PageRank over the deterministic doc->term graph
         # (kg_triples_array's 4-idx mapping, doc_id < 400) plus pinned
         # term->term xref edges so rank propagates two hops.  Oracle =
-        # the pinned numpy-twin golden (phenoqc_spark/pagerank_golden.py,
+        # the pinned numpy-twin golden (goldens/pagerank_golden.py,
         # regenerated by scripts/gen_pagerank_golden.py) — an independent
         # pure-Python power iteration; the 6-dp rounding step is ~1e8×
         # the float-summation-order divergence, so the differential is a
@@ -1824,7 +1823,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # mass cycles through both ontology branches) plus the xrefs.
         # Teleport + dangling mass land on the uniform seed distribution;
         # seed-unreachable nodes are exactly 0 and filtered out.  Oracle =
-        # the pinned pure-Python twin (phenoqc_spark/ppr_golden.py,
+        # the pinned pure-Python twin (goldens/ppr_golden.py,
         # scripts/gen_ppr_golden.py), 6-dp rounding.
         from phenoqc_spark.operators.canonicalize import pagerank
 
@@ -1864,7 +1863,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # other ring broken at one link, plus two chord families — three
         # large SCCs (76/76/74) + 14 singletons, exercising trim,
         # coloring, and backward-confirm paths.  Oracle = the pinned
-        # iterative-Tarjan twin (phenoqc_spark/scc_golden.py,
+        # iterative-Tarjan twin (goldens/scc_golden.py,
         # scripts/gen_scc_golden.py); exact string match, no rounding.
         from phenoqc_spark.operators.canonicalize import (
             strongly_connected_components,
@@ -1895,7 +1894,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # randomized spectral sketch of the kg_ppr doc<->term adjacency:
         # σ̂ = sqrt(eig(ΩᵀAᵀAΩ)) from two distributed matvec aggregates
         # with md5-derived Rademacher Ω.  Oracle = the pinned dense-numpy
-        # twin (phenoqc_spark/spectral_golden.py,
+        # twin (goldens/spectral_golden.py,
         # scripts/gen_spectral_golden.py) — identical projection computed
         # with matmuls instead of shuffles, 6-dp rounding.
         from phenoqc_spark.operators.canonicalize import spectral_sketch
@@ -2312,7 +2311,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # edge pairs: full-batch gradient descent with md5-seeded init
         # and md5-drawn negatives, loss evaluated before each update.
         # Oracle = the pinned dense-numpy twin
-        # (phenoqc_spark/sgns_golden.py, scripts/gen_sgns_golden.py) —
+        # (goldens/sgns_golden.py, scripts/gen_sgns_golden.py) —
         # the differential exercises the join+aggregate gradient chain.
         from phenoqc_spark.operators.embeddings import sgns_train
 
@@ -2418,7 +2417,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # leaves the 180 edges whose triangles mutually survive — a
         # proper irregular subgraph, so the cascade matters.  Oracle =
         # the pinned sequential-peeling twin
-        # (phenoqc_spark/ktruss_golden.py, scripts/gen_ktruss_golden.py);
+        # (goldens/ktruss_golden.py, scripts/gen_ktruss_golden.py);
         # exact string rows.
         from phenoqc_spark.operators.canonicalize import ktruss
 
@@ -2486,7 +2485,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def kg_hits(spark, sf_dir):
         # Kleinberg HITS over the same doc->term (+xref) graph: docs are
         # hubs, ontology terms authorities.  Oracle = the pinned numpy
-        # twin (phenoqc_spark/hits_golden.py, scripts/gen_hits_golden.py)
+        # twin (goldens/hits_golden.py, scripts/gen_hits_golden.py)
         # with the operator's exact update order and 6-dp rounding.
         from phenoqc_spark.operators.canonicalize import hits
 
@@ -2513,7 +2512,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def kg_communities(spark, sf_dir):
         # synchronous label-propagation communities over the same
         # doc->term (+xref) graph as kg_pagerank, 5 rounds.  Oracle = the
-        # pinned pure-Python twin (phenoqc_spark/lpa_golden.py,
+        # pinned pure-Python twin (goldens/lpa_golden.py,
         # scripts/gen_lpa_golden.py) — integer vote counts + string min
         # tie-break, so the differential is exact (no float rounding).
         from phenoqc_spark.operators.canonicalize import label_propagation
@@ -2887,7 +2886,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def kg_node2vec(spark, sf_dir):
         # second-order biased walks (p=0.25 return-biased, q=4.0 BFS-ish)
         # over the kg_pagerank graph; oracle = the pinned pure-Python twin
-        # golden (phenoqc_spark/n2v_golden.py, scripts/gen_n2v_golden.py)
+        # golden (goldens/n2v_golden.py, scripts/gen_n2v_golden.py)
         # which replicates the float ops bit-for-bit
         from phenoqc_spark.operators.canonicalize import node2vec_walks
 
@@ -3060,7 +3059,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # k-core decomposition (distributed peeling) over the same
         # deterministic relation graph as kg_triangles/kg_clustering;
         # oracle = pinned sequential-peeling golden
-        # (phenoqc_spark/kcore_golden.py, scripts/gen_kcore_golden.py) —
+        # (goldens/kcore_golden.py, scripts/gen_kcore_golden.py) —
         # the k-core is unique, so the independent twin must match exactly
         from phenoqc_spark.operators.canonicalize import coreness
 
@@ -3542,7 +3541,7 @@ FROM g, t ORDER BY host
     # lookup tables, and ADC ranking all SQL-recomputable.  The half-norm
     # literals (cn) are computed by the same Python expression feeding the
     # Spark literals, so the argmax tie-break is bit-identical.
-    from phenoqc_spark.pq_codebook import PQ_CODEBOOK_8x16x8 as _PQ
+    from goldens.pq_codebook import PQ_CODEBOOK_8x16x8 as _PQ
 
     _pq_rows = ",\n  ".join(
         f"({mi}, {j}, [{', '.join(repr(x) for x in c)}], {sum(x * x for x in c) / 2.0!r})"
@@ -3636,7 +3635,7 @@ FROM od FULL OUTER JOIN idg ON od.entity = idg.entity
 ORDER BY entity
 """
 
-    from phenoqc_spark.pagerank_golden import PAGERANK_400
+    from goldens.pagerank_golden import PAGERANK_400
 
     _pr_vals = ",\n  ".join(
         f"('{n}', CAST({r} AS DOUBLE))" for n, r in PAGERANK_400
@@ -3647,7 +3646,7 @@ ORDER BY entity
         + '\n) AS t(node, "rank") ORDER BY node'
     )
 
-    from phenoqc_spark.ppr_golden import PPR_400
+    from goldens.ppr_golden import PPR_400
 
     _ppr_vals = ",\n  ".join(
         f"('{n}', CAST({r} AS DOUBLE))" for n, r in PPR_400
@@ -3833,7 +3832,7 @@ SELECT source, count(DISTINCT md5(text)) AS n_distinct
 FROM documents GROUP BY source ORDER BY source
 """
 
-    from phenoqc_spark.bpe_golden import BPE_MERGES_30 as _BPE
+    from goldens.bpe_golden import BPE_MERGES_30 as _BPE
 
     _bpe_vals = ",\n  ".join(f"({s}, '{a}', '{b}', {n})" for (s, a, b, n) in _BPE)
     o["txt_bpe_merges"] = (
@@ -3922,7 +3921,7 @@ SELECT LEAST(CAST(FLOOR(score * 10) AS INT), 9) AS bin,
 FROM s GROUP BY 1 ORDER BY bin
 """
 
-    from phenoqc_spark.ktruss_golden import KTRUSS_120
+    from goldens.ktruss_golden import KTRUSS_120
 
     _kt_vals = ",\n  ".join(f"('{a}', '{b}')" for a, b in KTRUSS_120)
     o["kg_ktruss"] = (
@@ -3931,7 +3930,7 @@ FROM s GROUP BY 1 ORDER BY bin
         + "\n) AS t(node_a, node_b) ORDER BY node_a, node_b"
     )
 
-    from phenoqc_spark.sgns_golden import SGNS_AUC
+    from goldens.sgns_golden import SGNS_AUC
 
     _sga_vals = ",\n  ".join(
         f"('{p_}', CAST({a} AS DOUBLE))" for p_, a in SGNS_AUC
@@ -3942,7 +3941,7 @@ FROM s GROUP BY 1 ORDER BY bin
         + "\n) AS t(phase, auc) ORDER BY phase"
     )
 
-    from phenoqc_spark.sgns_golden import SGNS_LOSSES
+    from goldens.sgns_golden import SGNS_LOSSES
 
     _sg_vals = ",\n  ".join(
         f"(CAST({e} AS INT), CAST({l} AS DOUBLE))" for e, l in SGNS_LOSSES
@@ -4035,7 +4034,7 @@ FROM scored WHERE score > 0
 ORDER BY score DESC, doc_id LIMIT 15
 """
 
-    from phenoqc_spark.spectral_golden import SPECTRAL_8
+    from goldens.spectral_golden import SPECTRAL_8
 
     _sp_vals = ",\n  ".join(
         f"(CAST({i} AS INT), CAST({s} AS DOUBLE))" for i, s in SPECTRAL_8
@@ -4046,7 +4045,7 @@ ORDER BY score DESC, doc_id LIMIT 15
         + "\n) AS t(component, sigma) ORDER BY component"
     )
 
-    from phenoqc_spark.kmeans_golden import KMEANS_500
+    from goldens.kmeans_golden import KMEANS_500
 
     _km_vals = ",\n  ".join(
         f"(CAST({i} AS BIGINT), CAST({c} AS INT))" for i, c in KMEANS_500
@@ -4057,7 +4056,7 @@ ORDER BY score DESC, doc_id LIMIT 15
         + "\n) AS t(vec_id, cluster) ORDER BY vec_id"
     )
 
-    from phenoqc_spark.scc_golden import SCC_240
+    from goldens.scc_golden import SCC_240
 
     _scc_vals = ",\n  ".join(f"('{n}', '{s}')" for n, s in SCC_240)
     o["kg_scc"] = (
@@ -4066,7 +4065,7 @@ ORDER BY score DESC, doc_id LIMIT 15
         + "\n) AS t(node, scc_id) ORDER BY node"
     )
 
-    from phenoqc_spark.pagerank_golden import PAGERANK_W_400
+    from goldens.pagerank_golden import PAGERANK_W_400
 
     _prw_vals = ",\n  ".join(
         f"('{n}', CAST({r} AS DOUBLE))" for n, r in PAGERANK_W_400
@@ -4077,7 +4076,7 @@ ORDER BY score DESC, doc_id LIMIT 15
         + '\n) AS t(node, "rank") ORDER BY node'
     )
 
-    from phenoqc_spark.hits_golden import HITS_400
+    from goldens.hits_golden import HITS_400
 
     _hits_vals = ",\n  ".join(
         f"('{n}', CAST({hb} AS DOUBLE), CAST({au} AS DOUBLE))" for n, hb, au in HITS_400
@@ -4088,7 +4087,7 @@ ORDER BY score DESC, doc_id LIMIT 15
         + "\n) AS t(node, hub, authority) ORDER BY node"
     )
 
-    from phenoqc_spark.lpa_golden import LPA_400
+    from goldens.lpa_golden import LPA_400
 
     _lpa_vals = ",\n  ".join(f"('{n}', '{l}')" for n, l in LPA_400)
     o["kg_communities"] = (
@@ -4386,7 +4385,7 @@ ORDER BY center, context, "offset"
 """
     )
 
-    from phenoqc_spark.n2v_golden import N2V_400
+    from goldens.n2v_golden import N2V_400
 
     _n2v_vals = ",\n  ".join(
         f"('{s}', {w}, {st}, '{n}')" for s, w, st, n in N2V_400
@@ -5270,7 +5269,7 @@ FROM ranked WHERE rank <= 10 ORDER BY query_id, rank
 
     # sim_ann_ivf: pinned codebook → every stage SQL-recomputable (same
     # argmax/tie-break and probe ordering as the Spark plan).
-    from phenoqc_spark.ivf_codebook import IVF_CODEBOOK_8x64 as _cb
+    from goldens.ivf_codebook import IVF_CODEBOOK_8x64 as _cb
 
     _cell_vals = ",\n  ".join(
         f"({j}, [{', '.join(repr(x) for x in c)}])" for j, c in enumerate(_cb)
@@ -5620,7 +5619,7 @@ SELECT CAST(SUM(CASE WHEN event_id % 10 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_f
     # by scripts/gen_impute_golden.py from the SAME impute_numpy kernels the
     # Spark queries run inside mapInPandas on a bit-identical input chunk
     # (_events_impute2), so repr round-trip makes the VALUES oracle exact
-    from phenoqc_spark import impute_golden as _G
+    from goldens import impute_golden as _G
 
     def _impute_oracle(rows):
         vals = ",\n  ".join(f"({i}, {v!r}, {f!r})" for (i, v, f) in rows)
@@ -6071,7 +6070,7 @@ FROM ann a JOIN reach r ON r.node = a.t AND r.ancestor = 1
 ORDER BY 1, 2
 """
 
-    from phenoqc_spark.kcore_golden import KCORE_45 as _KC
+    from goldens.kcore_golden import KCORE_45 as _KC
 
     _kc_vals = ",\n        ".join(f"({n}, {c})" for (n, c) in _KC)
     o["kg_kcore"] = (
@@ -6079,7 +6078,7 @@ ORDER BY 1, 2
         f"FROM (VALUES\n        {_kc_vals}) AS t(node, coreness)\nORDER BY node"
     )
 
-    from phenoqc_spark.hash_embed_golden import HASH_EMBED_5x64 as _HE
+    from goldens.hash_embed_golden import HASH_EMBED_5x64 as _HE
 
     _he_vals = ",\n  ".join(f"({v}, {i}, {round(x, 9)!r})" for (v, i, x) in _HE)
     o["sim_hash_embed"] = (

@@ -91,7 +91,7 @@ def main() -> None:
     from phenoqc_spark.api import DataValidator, ImputationEngine
     from phenoqc_spark.config import load_config
     from phenoqc_spark.ontology import TermResolver
-    from phenoqc_spark.operators.triples import map_wide, mapping_stats, resolve_vocab, terms_long
+    from phenoqc_spark.operators.triples import map_wide, mapping_stats, terms_long
     from phenoqc_spark.session import get_spark
     from phenoqc_spark.sources.readers import collect_input_files, load_data
 
@@ -268,8 +268,7 @@ def main() -> None:
                 id_col=args.unique_identifiers[0],
                 url_col="_u",
             )
-            links = resolve_vocab(terms, resolver_bc)
-            stats_rows = [r.asDict() for r in mapping_stats(terms, links).collect()]
+            stats_rows = [r.asDict() for r in mapping_stats(terms, resolver_bc).collect()]
 
         out_dir = os.path.join(args.output, f"{stem}_processed.csv")
         writer = mapped.coalesce(1) if args.single_file else mapped

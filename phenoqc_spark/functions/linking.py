@@ -6,72 +6,60 @@ resolver's per-executor memo — the reference's per-chunk
 ``dropna().unique()`` (reference: src/phenoqc/batch_processing.py:594) —
 and fans the links back out with a pandas merge.  The dictionaries ride
 a Spark broadcast variable and the fact side is never shuffled for
-linking.  ``link_distinct_terms`` resolves an already-distinct term
-column, for vocabulary-sized outputs (mapping stats, the wide QC table).
+linking.  ``link_distinct_terms`` resolves an already-distinct frame
+of (…, term_norm) rows, keeps the other columns and emits unmapped
+pairs too: ``mapping_stats`` feeds it distinct (column, term_norm)
+pairs, and ``resolve_vocab`` (the wide QC table) distinct terms.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
 
-LINK_SCHEMA = (
-    "term_norm string, ontology string, term_id string, tier string, score double"
-)
+def link_distinct_terms(distinct_terms: DataFrame, resolver_bc) -> DataFrame:
+    """(…, term_norm) → (…, term_norm, ontology, term_id, tier, score).
 
-
-def link_distinct_terms(
-    distinct_terms: DataFrame,
-    resolver_bc,
-    ontologies: List[str] | None = None,
-) -> DataFrame:
-    """distinct (term_norm) → long (term_norm, ontology, term_id, tier, score).
-
-    Unmapped (term, ontology) pairs are emitted with NULL term_id so
-    mapping-rate metrics (reference: batch_processing.py:778-790) can be
-    computed from the same output.
+    One output row per input row and target ontology; the input columns
+    pass through.  Unmapped (term, ontology) pairs are emitted with NULL
+    term_id so mapping-rate metrics (reference:
+    batch_processing.py:778-790) can be computed from the same output.
+    The input is expected to be distinct; a term repeated under several
+    keys resolves once per executor through the resolver's memo.
     """
+    schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in distinct_terms.schema.fields
+    ) + ", ontology string, term_id string, tier string, score double"
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         resolver = resolver_bc.value
-        targets = ontologies or resolver.default_ontologies
+        targets = resolver.default_ontologies
         for pdf in batches:
-            terms = pdf["term_norm"].tolist()
-            out_term, out_onto, out_id, out_tier, out_score = [], [], [], [], []
-            for t in terms:
+            out_id, out_tier, out_score = [], [], []
+            for t in pdf["term_norm"].tolist():
                 detailed = resolver.map_term_cached(t)
                 for onto in targets:
-                    res = detailed.get(onto)
-                    out_term.append(t)
-                    out_onto.append(onto)
-                    if res is None:
-                        out_id.append(None)
-                        out_tier.append(None)
-                        out_score.append(None)
-                    else:
-                        out_id.append(res[0])
-                        out_tier.append(res[1])
-                        out_score.append(res[2])
-            yield pd.DataFrame(
-                {
-                    "term_norm": out_term,
-                    "ontology": out_onto,
-                    "term_id": out_id,
-                    "tier": out_tier,
-                    "score": out_score,
-                }
+                    res = detailed.get(onto) or (None, None, None)
+                    out_id.append(res[0])
+                    out_tier.append(res[1])
+                    out_score.append(res[2])
+            out = pdf.loc[pdf.index.repeat(len(targets))].reset_index(drop=True)
+            yield out.assign(
+                ontology=targets * len(pdf),
+                term_id=out_id,
+                tier=out_tier,
+                score=out_score,
             )
 
-    return distinct_terms.select("term_norm").mapInPandas(gen, LINK_SCHEMA)
+    return distinct_terms.mapInPandas(gen, schema)
 
 
 def link_terms_inline(
     terms: DataFrame,
     resolver_bc,
-    ontologies=None,
     normalize: bool = False,
     drop_input_cols: tuple = (),
 ) -> DataFrame:
@@ -108,7 +96,7 @@ def link_terms_inline(
         from phenoqc_spark.ontology.normalize import normalize_series
 
         resolver = resolver_bc.value
-        targets = ontologies or resolver.default_ontologies
+        targets = resolver.default_ontologies
         for pdf in batches:
             if normalize:
                 # normalize batch-UNIQUE surface forms and map back (term

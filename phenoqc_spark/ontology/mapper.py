@@ -219,8 +219,8 @@ class TermResolver:
 
         ``link_terms_inline`` calls it once per batch-unique term, so the
         memo absorbs repeats across batches and tasks on one executor (hub
-        terms resolve once); ``link_distinct_terms`` calls it over an
-        already-distinct vocabulary.  Cleared at ``_memo_max`` entries.
+        terms resolve once); ``link_distinct_terms`` calls it once per
+        distinct input row.  Cleared at ``_memo_max`` entries.
         """
         hit = self._cache.get(term_norm)
         if hit is None:

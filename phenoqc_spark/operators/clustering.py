@@ -3,8 +3,8 @@
 Corpus clustering is a first-class training-data-curation primitive:
 cluster-balanced sampling (SemDeDup/DSIR-style mixes), IVF codebook
 training at corpus scale (the sampled-driver codebook in
-``ivf_codebook.py`` is the small-scale stand-in; this operator is the
-100 TB path), and topic-shard layout for locality.
+``goldens/ivf_codebook.py`` is the small-scale stand-in; this operator
+is the 100 TB path), and topic-shard layout for locality.
 
 Design (Spark-first, no RDDs):
 
@@ -38,13 +38,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-
-
-def _centroids_from_rows(rows, k: int, d: int) -> np.ndarray:
-    c = np.zeros((k, d), dtype=np.float64)
-    for r in rows:
-        c[int(r[0])] = np.asarray(r[1], dtype=np.float64)
-    return c
 
 
 def kmeans(

@@ -316,45 +316,6 @@ def ngram_jaccard_pairs(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 64,
-    n: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, sig array<bigint>) — minhash over word n-gram shingles.
-
-    Permutation i is simulated with ``xxhash64(shingle, i)``; the signature
-    is a per-doc min-aggregate. All JVM-side (no UDF).
-    """
-    return _signatures_from_shingles(word_shingles(df, n, text_col, id_col), num_hashes)
-
-
-def _signatures_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
-    """Per-doc elementwise-min of ``xxhash64(shingle, i)`` for i in [0, k).
-
-    Shaped as posexplode → groupBy(doc_id, i).min → re-assemble, instead of
-    k separate ``min(...)`` scalar aggregates in one HashAggregate: the k-agg
-    form builds a single enormous codegen unit (k copies of the hash + agg
-    update inlined) whose first-run JIT dominated the cold wall-clock
-    (~18 s at sf0.1 for k=64). The exploded form has a constant-size
-    expression tree; map-side partial min keeps the shuffle at ~k rows per
-    (doc, input partition) — the same volume the wide row carried. Values
-    are identical: xxhash64(shingle, i) hashes the (shingle, i) pair either
-    way."""
-    hashed = sh.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(f"transform(sequence(0, {num_hashes - 1}), i -> xxhash64(shingle, i))")
-        ).alias("i", "h"),
-    )
-    mins = hashed.groupBy("doc_id", "i").agg(F.min("h").alias("m"))
-    return mins.groupBy("doc_id").agg(
-        F.expr("transform(array_sort(collect_list(struct(i, m))), s -> s.m)").alias("sig")
-    )
-
-
 def containment_pairs(
     df: DataFrame,
     n: int = 3,

@@ -94,9 +94,3 @@ def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
             ).alias("frame_ts_ms"),
         )
     )
-
-
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: passes payload through the Arrow batch path and
-    rewrites metadata; the pixel kernel is the documented stub."""
-    return media.withColumn("width", F.lit(width)).withColumn("height", F.lit(height))

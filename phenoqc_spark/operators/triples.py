@@ -11,8 +11,10 @@ Fact path (SURVEY.md §4.3), composed by ``pipeline.build_triples``:
            per-executor memo: hub terms are cache hits; no join-back]
         └─ triples: (subj, pred, obj) set dedup     [the one exchange]
 
-``resolve_vocab`` (distinct normalized terms → links) serves only
-vocabulary-sized outputs: ``mapping_stats`` and ``map_wide``.
+``mapping_stats`` links the distinct (column, term_norm) pairs once
+and counts them per (column, ontology): one explode, no join.
+``resolve_vocab`` (distinct normalized terms → links, unmapped rows
+included) serves the wide QC table, ``map_wide``.
 """
 
 from __future__ import annotations
@@ -111,18 +113,22 @@ def triples(linked: DataFrame) -> DataFrame:
     ).dropDuplicates(["subj", "pred", "obj"])
 
 
-def mapping_stats(terms: DataFrame, links: DataFrame) -> DataFrame:
+def mapping_stats(terms: DataFrame, resolver_bc) -> DataFrame:
     """Per (column, ontology) mapping success over distinct (column, term)
     pairs (reference: batch_processing.py:334-342,778-790; the engine uses
     global distinct pairs instead of per-chunk uniques — documented delta).
+
+    One pass over ``terms``: the distinct pairs go through
+    ``link_distinct_terms``, which emits unmapped pairs with a NULL
+    term_id, and are counted per (column, ontology).
     """
     col_terms = (
         terms.filter(F.col("term_norm") != "")
         .select("column", "term_norm")
         .distinct()
     )
-    joined = col_terms.join(F.broadcast(links), "term_norm", "inner")
-    return joined.groupBy("column", "ontology").agg(
+    linked = link_distinct_terms(col_terms, resolver_bc)
+    return linked.groupBy("column", "ontology").agg(
         F.count("*").alias("total_terms"),
         F.sum(F.col("term_id").isNotNull().cast("int")).alias("mapped_terms"),
         F.round(

@@ -115,12 +115,6 @@ def _h(salt: str):
     return F.xxhash64(F.col("url"), F.lit(salt))
 
 
-def _pick(pool: List[str], salt: str):
-    """Deterministic pool pick: element_at(pool, pmod(hash, len)+1)."""
-    arr = F.array(*[F.lit(s) for s in pool])
-    return F.element_at(arr, (F.pmod(_h(salt), F.lit(len(pool))) + 1).cast("int"))
-
-
 def _pick_idx(pool_len: int, salt: str):
     return F.pmod(_h(salt), F.lit(pool_len)).cast("int")
 

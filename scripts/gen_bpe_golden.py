@@ -3,7 +3,7 @@ pure-Python twin of operators/bpe.py (same tokenizer, same padded-
 string replace semantics, same (n desc, left asc, right asc) tie-break)
 — the differential oracle for the ``txt_bpe_merges`` gate query.
 
-Usage: python scripts/gen_bpe_golden.py  (rewrites phenoqc_spark/bpe_golden.py)
+Usage: python scripts/gen_bpe_golden.py  (rewrites goldens/bpe_golden.py)
 """
 
 from __future__ import annotations
@@ -53,7 +53,7 @@ def main() -> None:
 
     out = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "phenoqc_spark",
+        "goldens",
         "bpe_golden.py",
     )
     with open(out, "w") as fh:

@@ -2,7 +2,7 @@
 
 Runs phenoqc_spark.operators.similarity.hash_embedding over the sf0.01
 documents with doc_id < 5 (dim=64, seed=42) — exactly what the Spark
-query computes — and writes phenoqc_spark/hash_embed_golden.py with the
+query computes — and writes goldens/hash_embed_golden.py with the
 (vec_id, idx, value) triplets at full double precision.  DuckDB cannot
 reproduce Spark's seeded xxhash64, so the oracle is these pinned values
 (the same differential strategy as the imputation goldens).  Re-run when
@@ -36,7 +36,7 @@ rows = (
 )
 out = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "phenoqc_spark",
+    "goldens",
     "hash_embed_golden.py",
 )
 with open(out, "w") as f:

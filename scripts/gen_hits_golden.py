@@ -7,7 +7,7 @@ iteration with the operator's exact update order (auth from hub,
 L2-normalize, hub from auth, L2-normalize; 10 iterations).  Scores are
 pinned rounded to 6 decimals.
 
-Writes phenoqc_spark/hits_golden.py.
+Writes goldens/hits_golden.py.
 """
 
 import os
@@ -67,7 +67,7 @@ for _ in range(ITERS):
 rows = [(v, round(float(h[pos[v]]), 6), round(float(a_vec[pos[v]]), 6)) for v in nodes]
 out_path = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "phenoqc_spark",
+    "goldens",
     "hits_golden.py",
 )
 with open(out_path, "w") as fh:

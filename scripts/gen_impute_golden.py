@@ -15,7 +15,7 @@ be bit-deterministic:
   mapInPandas, so outputs are bit-identical and the goldens can be emitted
   at full double precision (repr round-trip), no rounding-parity games.
 
-Writes phenoqc_spark/impute_golden.py.  Re-run when the imputer
+Writes goldens/impute_golden.py.  Re-run when the imputer
 implementations, the query masks, or the sf0.01 fixture change.
 """
 
@@ -59,7 +59,7 @@ GOLDENS = {
 
 out_path = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "phenoqc_spark",
+    "goldens",
     "impute_golden.py",
 )
 with open(out_path, "w") as f:

@@ -1,4 +1,4 @@
-"""Regenerate phenoqc_spark/ivf_codebook.py (pinned IVF codebook artifact).
+"""Regenerate goldens/ivf_codebook.py (pinned IVF codebook artifact).
 
 Usage: python scripts/gen_ivf_codebook.py [sf_dir]
 """

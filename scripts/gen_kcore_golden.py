@@ -8,7 +8,7 @@ independent sequential peel (phase k removes all nodes of remaining
 degree ≤ k to a fixpoint, assigns coreness k) — the k-core is unique,
 so any correct implementation must match exactly.
 
-Writes phenoqc_spark/kcore_golden.py.  Re-run if the edge rule or the
+Writes goldens/kcore_golden.py.  Re-run if the edge rule or the
 sf0.01 fixture changes.
 """
 
@@ -49,7 +49,7 @@ while adj:
 
 out = sorted(want.items())
 path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                    "phenoqc_spark", "kcore_golden.py")
+                    "goldens", "kcore_golden.py")
 with open(path, "w") as f:
     f.write('"""Pinned sequential-peeling coreness golden for kg_kcore\n'
             "(generated by scripts/gen_kcore_golden.py against sf0.01 —\n"

@@ -13,7 +13,7 @@ while cross-implementation float wobble is ~1e-12 — the script asserts
 the minimum relative margin so a fixture change that created a genuine
 tie would fail generation instead of pinning a flaky golden.
 
-Writes phenoqc_spark/kmeans_golden.py.
+Writes goldens/kmeans_golden.py.
 """
 
 import hashlib
@@ -64,7 +64,7 @@ out_rows = sorted(zip(ids, a.tolist()))
 
 out_path = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "phenoqc_spark",
+    "goldens",
     "kmeans_golden.py",
 )
 with open(out_path, "w") as fh:

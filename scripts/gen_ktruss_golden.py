@@ -11,7 +11,7 @@ nodes n000..n119, undirected edges
 
 Twin: independent sequential peeling — recount per-edge triangle
 support, drop support < k−2, repeat to fixpoint.  Exact string rows,
-no rounding.  Writes phenoqc_spark/ktruss_golden.py.
+no rounding.  Writes goldens/ktruss_golden.py.
 """
 
 import itertools
@@ -62,7 +62,7 @@ while True:
 rows = sorted(cur)
 out_path = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "phenoqc_spark",
+    "goldens",
     "ktruss_golden.py",
 )
 with open(out_path, "w") as fh:

@@ -11,7 +11,7 @@ by the lexicographically smallest label; fixed ITERS rounds).  The update
 is integer vote counting + string min — no float divergence at all, so the
 differential is exact.
 
-Writes phenoqc_spark/lpa_golden.py.  Re-run if the mapping, XREF list,
+Writes goldens/lpa_golden.py.  Re-run if the mapping, XREF list,
 iteration count, or the sf0.01 fixture change.
 """
 
@@ -77,7 +77,7 @@ n_comm = len(set(labels.values()))
 
 out_path = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "phenoqc_spark",
+    "goldens",
     "lpa_golden.py",
 )
 with open(out_path, "w") as fh:

@@ -12,7 +12,7 @@ BEFORE the division, as Spark's cast-then-divide does), running weight
 sums accumulate in sorted-candidate order, and the winner is the first
 candidate whose cumulative weight strictly exceeds u*total.
 
-Writes phenoqc_spark/n2v_golden.py.  Re-run if the mapping, XREF list,
+Writes goldens/n2v_golden.py.  Re-run if the mapping, XREF list,
 parameters, or the sf0.01 fixture change.
 """
 
@@ -97,7 +97,7 @@ for start in sorted(adj):
 
 out_path = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "phenoqc_spark",
+    "goldens",
     "n2v_golden.py",
 )
 with open(out_path, "w") as fh:

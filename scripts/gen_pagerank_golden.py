@@ -15,7 +15,7 @@ redistributed uniformly, Σrank = 1 invariant).  Ranks are emitted rounded
 to 6 decimals; float-order differences between Spark's distributed sums
 and numpy's are ~1e-14, far below the rounding step.
 
-Writes phenoqc_spark/pagerank_golden.py.  Re-run if the mapping, XREF
+Writes goldens/pagerank_golden.py.  Re-run if the mapping, XREF
 list, iteration count, or the sf0.01 fixture change.
 """
 
@@ -110,7 +110,7 @@ assert abs(sum(wranks.values()) - 1.0) < 1e-9
 
 out_path = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "phenoqc_spark",
+    "goldens",
     "pagerank_golden.py",
 )
 with open(out_path, "w") as fh:

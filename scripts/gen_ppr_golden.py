@@ -20,7 +20,7 @@ seeds are exactly 0 and are DROPPED from the golden (the query filters
 rank > 0 — the "relatedness result set").  Ranks rounded to 6 dp
 (float-order divergence vs the distributed sums is ~1e-14).
 
-Writes phenoqc_spark/ppr_golden.py.  Re-run if the mapping, XREF list,
+Writes goldens/ppr_golden.py.  Re-run if the mapping, XREF list,
 back-edge rule, seeds, iteration count, or the sf0.01 fixture change.
 """
 
@@ -92,7 +92,7 @@ rows = [(v, round(ranks[v], 6)) for v in nodes if ranks[v] > 0.0]
 
 out_path = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "phenoqc_spark",
+    "goldens",
     "ppr_golden.py",
 )
 with open(out_path, "w") as fh:

@@ -1,9 +1,9 @@
-"""Regenerate phenoqc_spark/pq_codebook.py (pinned PQ codebook artifact:
+"""Regenerate goldens/pq_codebook.py (pinned PQ codebook artifact:
 m=8 subvectors × ksub=16 centroids × 8 dims, trained on sf0.01
 embeddings, seed 42 — the versioned-model pattern shared with
 ivf_codebook.py).
 
-Usage: python scripts/gen_pq_codebook.py [sf_dir] > phenoqc_spark/pq_codebook.py
+Usage: python scripts/gen_pq_codebook.py [sf_dir] > goldens/pq_codebook.py
 """
 
 import sys

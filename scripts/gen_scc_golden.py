@@ -20,7 +20,7 @@ stack — no recursion limit games), emitting scc_id = max member id, the
 same canonical id the distributed coloring operator produces (its color
 roots are max-reachable ids).  Exact string comparison — no rounding.
 
-Writes phenoqc_spark/scc_golden.py.  Re-run if the edge rule or the
+Writes goldens/scc_golden.py.  Re-run if the edge rule or the
 sf0.01 fixture change.
 """
 
@@ -112,7 +112,7 @@ sizes = sorted((len(c) for c in sccs), reverse=True)
 
 out_path = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "phenoqc_spark",
+    "goldens",
     "scc_golden.py",
 )
 with open(out_path, "w") as fh:

@@ -11,7 +11,7 @@ substrate — so the differential checks the join/aggregate gradient
 machinery.  Losses are O(10^3) sums of O(10^3) terms; cross-impl float
 wobble ~1e-10 << the 6-dp rounding step.
 
-Writes phenoqc_spark/sgns_golden.py.
+Writes goldens/sgns_golden.py.
 """
 
 import hashlib
@@ -98,7 +98,7 @@ assert losses[0] > losses[-1], "loss must decrease"
 
 out_path = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "phenoqc_spark",
+    "goldens",
     "sgns_golden.py",
 )
 with open(out_path, "w") as fh:

@@ -10,7 +10,7 @@ matvec aggregates, so the differential checks the shuffle chain.
 σ̂ = sqrt(clip(eigh(B), 0)) descending, rounded to 6 dp (cross-impl
 float wobble ~1e-12).
 
-Writes phenoqc_spark/spectral_golden.py.
+Writes goldens/spectral_golden.py.
 """
 
 import hashlib
@@ -82,7 +82,7 @@ rows = [(i, round(float(s), 6)) for i, s in enumerate(sig)]
 
 out_path = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "phenoqc_spark",
+    "goldens",
     "spectral_golden.py",
 )
 with open(out_path, "w") as fh:

@@ -77,8 +77,9 @@ def test_report(spark, tmp_path, resolver):
 
     recs = extract_records(pages)
     terms = T.terms_long(recs, ["PrimaryPhenotype", "DiseaseCode"], [])
-    links = T.resolve_vocab(terms, spark.sparkContext.broadcast(resolver))
-    stats = T.mapping_stats(terms, links).orderBy("column", "ontology")
+    stats = T.mapping_stats(terms, spark.sparkContext.broadcast(resolver)).orderBy(
+        "column", "ontology"
+    )
     html = generate_html_report(
         spark,
         str(tmp_path / "triples"),

@@ -1,6 +1,8 @@
 """End-to-end acceptance: byte-identical extraction + triple P/R vs the
 differential ground truth (FIXTURES.md §6; P ≥ 0.95 and R ≥ 0.95)."""
 
+import gc
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -59,11 +61,20 @@ def test_mapping_stats_shape(spark, resolver):
 
     pages = PG.generate_pages(spark, 300, partitions=4)
     terms = T.terms_long(extract_records(pages))
-    links = T.resolve_vocab(terms, spark.sparkContext.broadcast(resolver))
-    stats = T.mapping_stats(terms, links).collect()
+    stats = T.mapping_stats(terms, spark.sparkContext.broadcast(resolver)).collect()
     assert {r.column for r in stats} >= {"PrimaryPhenotype", "DiseaseCode"}
     for r in stats:
         assert 0 <= r.success_rate_pct <= 100
+    # each distinct (column, term_norm) pair counts once per target
+    # ontology, mapped when the resolver answers for that ontology
+    pairs = terms.filter("term_norm != ''").select("column", "term_norm").distinct()
+    expected = {}
+    for p in pairs.collect():
+        detailed = resolver.map_term_detailed(p.term_norm)
+        for onto in resolver.default_ontologies:
+            total, mapped = expected.get((p.column, onto), (0, 0))
+            expected[(p.column, onto)] = (total + 1, mapped + (detailed.get(onto) is not None))
+    assert {(r.column, r.ontology): (r.total_terms, r.mapped_terms) for r in stats} == expected
 
 
 def test_run_pipeline_builds_in_few_driver_calls(spark, resolver, monkeypatch):
@@ -80,6 +91,10 @@ def test_run_pipeline_builds_in_few_driver_calls(spark, resolver, monkeypatch):
         calls.append(1)
         return send(*args, **kwargs)
 
+    # collect earlier tests' garbage first: Py4J sends one delete command
+    # per collected JVM proxy, and a cyclic collection that fires inside the
+    # counted window adds hundreds of calls the build never made
+    gc.collect()
     monkeypatch.setattr(client, "send_command", counting)
     out = run_pipeline(spark, pages, resolver)
     monkeypatch.undo()

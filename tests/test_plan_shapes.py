@@ -78,6 +78,20 @@ def test_kg_triples_entries_link_inline(spark, sf_dir, name):
     assert "Join" not in txt, txt
 
 
+def test_kg_mapping_stats_single_pass(spark, sf_dir):
+    """mapping_stats links the distinct (column, term_norm) pairs in one
+    pass over the terms: one explode, and no vocabulary branch joined
+    back onto the pairs."""
+    import re
+
+    import __spark_entry__ as E
+
+    txt = plan_text(E._all_queries()["kg_mapping_stats"](spark, sf_dir))
+    assert len(set(re.findall(r"Generate \((\d+)\)", txt))) == 1, txt
+    assert "Join" not in txt, txt
+    assert "BroadcastExchange" not in txt, txt
+
+
 def test_scan_pushdown_and_pruning(spark, sf_dir):
     from phenoqc_spark.sources import load_table
 
