@@ -214,13 +214,6 @@ def _str_stats(s: str):
     )
 
 
-def build_key_stats(keys):
-    """Precomputed :func:`_str_stats` per key (None for empty keys): the
-    scalar form of the prune, O(distinct-chars) bag math per key instead
-    of full WRatio.  Tests compare :class:`KeyIndex` against it."""
-    return [(_str_stats(k) if k else None) for k in keys]
-
-
 def _wratio_upper_bound(q, k) -> float:
     """Provable upper bound on wratio(s1, s2) from character-bag overlap.
 
@@ -272,19 +265,26 @@ def _wratio_upper_bound(q, k) -> float:
 
 
 class KeyIndex:
-    """Per-key stats for the character-bag WRatio bound, evaluated for all
-    keys in one numpy pass.
+    """Per-key stats for the character-bag WRatio bound, laid out so a query
+    evaluates the bound only on keys that can still reach the cutoff.
 
-    One count matrix over the keys' charset per WRatio operand variant
-    (original / token-sorted join / unique-token join), stored transposed
-    as ``(chars, keys)`` in the smallest unsigned type that holds the
-    counts, so a query's characters gather contiguous rows.  A variant
-    whose bags equal the original's for every key shares its array.  A
-    token→keys index (one offsets and one ids array) serves the token_set
-    100-shortcut.  :meth:`bounds` applies :func:`_wratio_upper_bound`'s
-    branch math element-wise with the same float expressions, so it is
-    bit-identical to the scalar bound (tests/test_properties.py) and
-    :func:`extract_one` returns the same (key, score) with or without it.
+    There is one count matrix per WRatio operand variant (original /
+    token-sorted join / unique-token join), stored transposed as
+    ``(chars, keys)`` in the smallest unsigned type that holds the counts,
+    so a query's characters read contiguous rows; a variant whose bags
+    equal the original's for every key shares its array.  Columns are
+    ordered by the keys' variant lengths (l0, l1, l2), so each bucket of
+    keys with equal lengths is one contiguous column range, and ``kid``
+    maps a column back to the key's insertion index.  Lengths are stored
+    in the smallest unsigned type; each bucket also keeps its most
+    unbacked joiner spaces (:meth:`_min_overlap`).  A token→columns index
+    (one offsets and one ids array) serves the token_set 100-shortcut.
+
+    :meth:`candidates` is an exact integer filter; :meth:`bounds` then
+    applies :func:`_wratio_upper_bound`'s branch math element-wise, with
+    the same float expressions, to the candidates alone.  It is
+    bit-identical to the scalar bound (tests/test_properties.py), so
+    :func:`extract_one` returns the same (key, score) as a full scan.
 
     ``TermResolver`` builds one per ontology when it is constructed on the
     driver; the index rides the broadcast pickle, so a worker only
@@ -297,9 +297,8 @@ class KeyIndex:
         n = len(keys)
         rows = np.arange(n, dtype=np.int64)
         l0 = np.fromiter(map(len, keys), dtype=np.int64, count=n)
-        self.valid = l0 > 0
-        # character columns: the keys' code points plus ' ', the joiner of
-        # the token variants; one bincount over (column, key) fills m0
+        # character rows: the keys' code points plus ' ', the joiner of
+        # the token variants; one bincount over (row, key) fills m0
         cps = np.frombuffer(
             "".join(keys).encode("utf-32-le", "surrogatepass"), dtype=np.uint32
         )
@@ -310,20 +309,24 @@ class KeyIndex:
         lut = np.zeros(len(seen), dtype=np.int64)
         lut[chars] = np.arange(C)
         m0 = np.bincount(lut[cps] * n + np.repeat(rows, l0), minlength=C * n).reshape(C, n)
-        # no variant count exceeds the largest original count
-        m0 = m0.astype(np.min_scalar_type(int(m0.max(initial=0))))
         char_list = [chr(c) for c in chars.tolist()]
         self.char_ix = {ch: j for j, ch in enumerate(char_list)}
         # token-sorted join: str.split() drops every isspace run, and the
         # join puts ntok-1 single spaces back
         toks = [k.split() for k in keys]
         ntok = np.fromiter(map(len, toks), dtype=np.int64, count=n)
+        spaces = np.maximum(ntok - 1, 0)
+        # no variant count exceeds the largest original or joiner count
+        top = max(int(m0.max(initial=0)), int(spaces.max(initial=0)))
+        m0 = m0.astype(np.min_scalar_type(top))
+        # keys holding each character: the filter takes rare rows first
+        self.df = np.count_nonzero(m0, axis=1)
         ws = np.array([ch.isspace() for ch in char_list], dtype=bool)
         sp = self.char_ix[" "]
         m1 = m0.copy()
         m1[ws] = 0
-        m1[sp] = np.maximum(ntok - 1, 0)
-        l1 = l0 - m0[ws].sum(axis=0, dtype=np.int64) + m1[sp]
+        m1[sp] = spaces
+        l1 = l0 - m0[ws].sum(axis=0, dtype=np.int64) + spaces
         if np.array_equal(m1, m0):
             m1 = m0
         # token→keys, deduplicated per key; a key with fewer distinct
@@ -333,11 +336,6 @@ class KeyIndex:
         tids = np.fromiter(map(tok_id.__getitem__, flat), dtype=np.int64, count=len(flat))
         pairs = np.unique(tids * n + np.repeat(rows, ntok))
         ptok, pkey = np.divmod(pairs, n)
-        self.tok_id = tok_id
-        self.tok_off = np.concatenate(
-            ([0], np.cumsum(np.bincount(ptok, minlength=len(tok_id))))
-        )
-        self.tok_keys = pkey.astype(np.int32)
         m2, l2 = m1, l1
         repeats = (np.bincount(pkey, minlength=n) < ntok).nonzero()[0]
         if len(repeats):
@@ -348,52 +346,172 @@ class KeyIndex:
                 for ch, cnt in _bag(ku).items():
                     m2[self.char_ix[ch], i] = cnt
                 l2[i] = len(ku)
-        self.m0, self.m1, self.m2 = m0, m1, m2
-        # empty keys get length 1 so the masked-out bound math stays finite
-        self.l0, self.l1, self.l2 = (np.where(self.valid, x, 1) for x in (l0, l1, l2))
+        # joiner spaces that the key's own spaces do not back
+        gap = np.maximum(spaces - m0[sp], 0)
+        # lay the columns out by (l0, l1, l2), so each bucket of keys
+        # with equal variant lengths is one contiguous range
+        kid = np.lexsort((l2, l1, l0))
+        col = np.empty(n, dtype=np.int64)
+        col[kid] = rows
+        self.kid = kid.astype(np.int32)
+        self.m0 = m0.take(kid, axis=1)
+        self.m1 = self.m0 if m1 is m0 else m1.take(kid, axis=1)
+        self.m2 = self.m1 if m2 is m1 else m2.take(kid, axis=1)
+        l0, l1, l2, gap = (x[kid] for x in (l0, l1, l2, gap))
+        self.tok_id = tok_id
+        self.tok_off = np.concatenate(
+            ([0], np.cumsum(np.bincount(ptok, minlength=len(tok_id))))
+        ).astype(np.int32)
+        self.tok_cols = col[pkey].astype(np.int32)
+        # buckets of the non-empty keys (empty keys sort first)
+        ne = int(np.searchsorted(l0, 1))
+        starts = ne + np.flatnonzero(
+            np.diff(l0[ne:], prepend=0) | np.diff(l1[ne:], prepend=-1) | np.diff(l2[ne:], prepend=-1)
+        )
+        self.b_off = np.append(starts, n)
+        self.b_len, self.b_l1, self.b_l2 = l0[starts], l1[starts], l2[starts]
+        self.b_gap = np.maximum.reduceat(gap, starts)
+        lt = np.min_scalar_type(int(l0.max(initial=0)))
+        self.l0, self.l1, self.l2 = (x.astype(lt) for x in (l0, l1, l2))
 
-    def _common(self, mat, bag):
-        """Bag overlap of ``bag`` with every key's column of ``mat``."""
+    def _common(self, mat, bag, cols=None):
+        """Bag overlap of ``bag`` with the columns ``cols`` of ``mat``
+        (every column by default)."""
         import numpy as np
 
-        cols, counts = [], []
+        top = np.iinfo(mat.dtype).max
+        out = np.zeros(mat.shape[1] if cols is None else len(cols), dtype=np.int64)
         for ch, cnt in bag.items():
             j = self.char_ix.get(ch)
             if j is not None:
-                cols.append(j)
-                counts.append(cnt)
-        if not cols:
-            return np.zeros(mat.shape[1], dtype=np.int64)
-        # clipping the query counts to the matrix type's range cannot
-        # change min(count, key count)
-        q = np.minimum(counts, np.iinfo(mat.dtype).max).astype(mat.dtype)
-        return np.minimum(mat[cols], q[:, None]).sum(axis=0, dtype=np.int64)
+                row = mat[j] if cols is None else mat[j].take(cols)
+                # clipping at the type's top cannot change min(count, key count)
+                out += row.clip(0, min(cnt, top))
+        return out
 
-    def bounds(self, qstat):
-        """Vector of :func:`_wratio_upper_bound` over all keys (−1 for
-        empty keys) — same branch math, element-wise."""
+    def _sharing(self, tq):
+        """Columns of the keys that share a token with the query."""
+        import numpy as np
+
+        off, parts = self.tok_off, []
+        for t in tq:
+            j = self.tok_id.get(t)
+            if j is not None:
+                parts.append(self.tok_cols[off[j] : off[j + 1]])
+        return np.concatenate(parts) if parts else np.zeros(0, dtype=np.int32)
+
+    def _min_overlap(self, qstat, cutoff):
+        """Per bucket, the least original-bag overlap c0 with which a key
+        that shares no token with the query can have bound + 1e-6 ≥
+        ``cutoff``; min(lq, l0) + 1 when none can.
+
+        The token-sorted joins drop whitespace and put ntok−1 spaces back,
+        so c1 = c0 − (whitespace overlap) + min(joiner spaces), which is at
+        most c0 + min(dq, max(gq, gk)): dq is the query's joiner spaces,
+        and gq, gk the joiner spaces that a string's own spaces do not back
+        (0 for single-spaced text).  A unique-token bag is pointwise no
+        larger than a sorted one, so c2 ≤ c1.  Every branch of the bound
+        grows with the overlaps, so it is evaluated, with :meth:`bounds`'
+        own float expressions, at c0 = 0..lq with each bucket's lengths
+        and its most unbacked joiner spaces; the result is monotone in c0.
+        """
         import numpy as np
 
         (lq, tq, bq, lsq, bsq, luq, buq) = qstat
+        L = self.b_len[:, None]
+        c = np.arange(lq + 1)[None, :]
+        dq = bsq.get(" ", 0)
+        gq = max(dq - bq.get(" ", 0), 0)
+        e = c + np.minimum(dq, np.maximum(gq, self.b_gap))[:, None]
+        r = 200.0 * c / (lq + L)
+        lo = np.minimum(lq, L)
+        hi = np.maximum(lq, L)
+        # branch 1: hi < 1.5*lo
+        ts_sort = 200.0 * e / np.maximum(lsq + self.b_l1, 1)[:, None]
+        uniq = 200.0 * e / np.maximum(luq + self.b_l2, 1)[:, None]
+        b1 = np.maximum(r, 0.95 * np.maximum(ts_sort, uniq))
+        # branch 2
+        sc = np.where(hi < 8 * lo, 0.9, 0.6)
+        pr = 100.0 * np.minimum(c, lo) / lo
+        ms = np.maximum(np.minimum(lsq, self.b_l1), 1)[:, None]
+        mu = np.maximum(np.minimum(luq, self.b_l2), 1)[:, None]
+        pt = np.maximum(100.0 * np.minimum(e, ms) / ms, 100.0 * np.minimum(e, mu) / mu)
+        b2 = np.maximum(r, np.maximum(sc * pr, 0.95 * sc * pt))
+        ok = np.where(hi < 1.5 * lo, b1, b2) + 1e-6 >= cutoff
+        return np.where(ok.any(axis=1), ok.argmax(axis=1), lo[:, 0] + 1)
+
+    def candidates(self, qstat, cutoff):
+        """Columns, ascending, of a superset of the keys whose bound + 1e-6
+        reaches ``cutoff``, found with integer tests only.
+
+        A key that shares a token with the query always stays (token
+        index).  Any other key needs its bucket's overlap c0 ≥ t
+        (:meth:`_min_overlap`): it may miss at most lq − t of the query's
+        character occurrences.  A query character that no key holds is a
+        miss for every key.  The others are taken rarest first (fewest
+        keys), and each drops the keys whose misses so far exceed that
+        slack: over every column while most survive, then over the
+        survivors only.  A key that survives every character has c0 ≥ t.
+        """
+        import numpy as np
+
+        lq, bq = qstat[0], qstat[2]
+        ix, df = self.char_ix, self.df
+        top = np.iinfo(self.m0.dtype).max
+        absent = sum(n for ch, n in bq.items() if ch not in ix)
+        rows = sorted((df[ix[ch]], ix[ch], n) for ch, n in bq.items() if ch in ix)
+        # acc: a column's slack plus its overlap so far, |acc| ≤ 2·lq + 1;
+        # a column is dropped once acc < the occurrences taken so far.
+        # Dense over every non-empty column until few survive, then gathered.
+        a = int(self.b_off[0])
+        slack = lq - absent - self._min_overlap(qstat, cutoff)
+        acc_t = np.promote_types(np.int16, np.min_scalar_type(-2 * lq - 1))
+        acc = np.repeat(slack, np.diff(self.b_off)).astype(acc_t)
+        taken, cols = 0, None
+        for _, j, n in rows:
+            have = self.m0[j, a:] if cols is None else self.m0[j].take(cols)
+            acc += have.clip(0, min(n, top))
+            taken += n
+            ok = acc >= taken
+            if cols is not None:
+                cols, acc = cols[ok], acc[ok]
+                if not len(cols):
+                    break
+            elif 4 * np.count_nonzero(ok) < len(ok):
+                cols = np.flatnonzero(ok)
+                acc = acc[cols]
+                cols += a
+        if cols is None:
+            cols = np.flatnonzero(acc >= taken) + a
+        return np.union1d(cols, self._sharing(qstat[1]))
+
+    def bounds(self, qstat, cols=None):
+        """:func:`_wratio_upper_bound` for the keys in columns ``cols``
+        (every column by default), −1 for empty keys — the same branch
+        math, element-wise."""
+        import numpy as np
+
+        (lq, tq, bq, lsq, bsq, luq, buq) = qstat
+        sel = slice(None) if cols is None else cols
         done = []  # (matrix, bag, overlap): variants often share both
 
         def common(mat, bag):
             for m, b, c in done:
                 if m is mat and b == bag:
                     return c
-            c = self._common(mat, bag)
+            c = self._common(mat, bag, cols)
             done.append((mat, bag, c))
             return c
 
         c0 = common(self.m0, bq)
         c1 = common(self.m1, bsq)
         c2 = common(self.m2, buq)
-        l0, l1, l2 = self.l0, self.l1, self.l2
-        shared = np.zeros(len(l0), dtype=bool)
-        for t in tq:
-            j = self.tok_id.get(t)
-            if j is not None:
-                shared[self.tok_keys[self.tok_off[j] : self.tok_off[j + 1]]] = True
+        l0, l1, l2 = (x[sel].astype(np.int64) for x in (self.l0, self.l1, self.l2))
+        valid = l0 > 0
+        l0 = np.maximum(l0, 1)  # keeps the masked-out math finite
+        shared = np.zeros(len(self.kid), dtype=bool)
+        shared[self._sharing(tq)] = True
+        shared = shared[sel]
         r = 200.0 * c0 / (lq + l0)
         lo = np.minimum(lq, l0)
         hi = np.maximum(lq, l0)
@@ -417,13 +535,11 @@ class KeyIndex:
         pt = np.where(shared, 100.0, np.maximum(pt_s, pt_u))
         b2 = np.maximum(r, np.maximum(sc * pr, 0.95 * sc * pt))
         out = np.where(hi < 1.5 * lo, b1, b2)
-        return np.where(self.valid, out, -1.0)
+        return np.where(valid, out, -1.0)
 
 
 def build_key_index(keys) -> KeyIndex:
-    """Vectorized twin of :func:`build_key_stats`: the same prune, with
-    the bound evaluated for all keys in one numpy pass (see
-    :class:`KeyIndex`)."""
+    """The fuzzy prune's :class:`KeyIndex` over ``keys`` (insertion order)."""
     return KeyIndex(keys)
 
 
@@ -435,14 +551,16 @@ def extract_one(query: str, keys, score_cutoff: float, key_stats=None):
     term order the chosen key (and thus the mapped id) is identical to the
     reference (SURVEY.md §7.4 risk 1).
 
-    ``key_stats`` (a :class:`KeyIndex` from :func:`build_key_index`, or
-    the per-key list from :func:`build_key_stats`) enables the
-    character-bag upper-bound prune: at HPO dictionary scale (50k keys)
-    a distinct unmatched surface pays a handful of full WRatio
-    evaluations instead of ~50k.  The bound only SKIPS keys that provably
-    cannot reach max(cutoff, best), so the returned (key, score) is
-    bit-identical with and without stats.  The rapidfuzz path ignores
-    ``key_stats``.
+    Without ``key_stats`` this is the plain WRatio scan over every key.
+    ``key_stats`` (a :class:`KeyIndex` from :func:`build_key_index`)
+    prunes it: :meth:`KeyIndex.candidates` filters the keys with integer
+    tests, the character-bag bound is evaluated on the candidates alone,
+    and WRatio runs, in insertion order, only on keys whose bound can
+    still reach max(cutoff, best).  At HPO dictionary scale (50k keys) a
+    distinct unmatched surface pays a handful of WRatio evaluations.  The
+    prune only skips keys that provably cannot win, so the returned
+    (key, score) is bit-identical to the full scan.  The rapidfuzz path
+    ignores ``key_stats``.
     """
     if not query:
         return None
@@ -453,39 +571,34 @@ def extract_one(query: str, keys, score_cutoff: float, key_stats=None):
         return None if res is None else (res[0], float(res[1]))
     best_key = None
     best_score = -1.0
-    qstat = _str_stats(query)
-    if isinstance(key_stats, KeyIndex):
-        # one numpy pass over all keys, then score the (few) survivors
-        # in insertion order — identical tie-break, identical result
-        ubs = key_stats.bounds(qstat) + 1e-6
-        for i in (ubs >= score_cutoff).nonzero()[0]:
-            if ubs[i] <= best_score:
-                continue
-            key = keys[i]
-            s = wratio(query, key)
-            if s >= score_cutoff and s > best_score:
-                best_key = key
-                best_score = s
-                if best_score == 100.0:
-                    break
-        if best_key is None:
+    if key_stats is None:
+        ids, ubs = [i for i, key in enumerate(keys) if key], None
+    else:
+        # the keys whose bound reaches the cutoff, in insertion order —
+        # identical tie-break, identical result
+        qstat = _str_stats(query)
+        cols = key_stats.candidates(qstat, score_cutoff)
+        if not len(cols):
             return None
-        return (best_key, best_score)
-    for i, key in enumerate(keys):
-        if not key:
-            continue
-        kstat = key_stats[i] if key_stats is not None else _str_stats(key)
-        # float-safety margin: the bound math is exact rational-in-float,
-        # but give wratio a hair of headroom before skipping
-        ub = _wratio_upper_bound(qstat, kstat) + 1e-6
-        if ub < score_cutoff or ub <= best_score:
-            continue
+        ubs = key_stats.bounds(qstat, cols) + 1e-6
+        keep = ubs >= score_cutoff
+        ids, ubs = key_stats.kid[cols[keep]], ubs[keep]
+        order = ids.argsort()
+        ids, ubs = ids[order], ubs[order]
+    i = 0
+    while i < len(ids):
+        key = keys[ids[i]]
+        i += 1
         s = wratio(query, key)
         if s >= score_cutoff and s > best_score:
             best_key = key
             best_score = s
             if best_score == 100.0:
                 break
+            if ubs is not None:
+                # later keys must strictly beat s: keep those whose bound can
+                rest = ubs[i:] > s
+                ids, ubs, i = ids[i:][rest], ubs[i:][rest], 0
     if best_key is None:
         return None
     return (best_key, best_score)

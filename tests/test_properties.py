@@ -6,7 +6,7 @@ reference DP definition, fuzzy extract_one contract, imputation
 unknown-strategy warning parity."""
 
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from phenoqc_spark.ontology.fuzzy import extract_one, wratio
 from phenoqc_spark.ontology.normalize import normalize_series, normalize_text
@@ -126,12 +126,13 @@ def test_wratio_bag_upper_bound_is_sound(a, b):
 @settings(max_examples=200, deadline=None)
 @given(word_st, st.lists(word_st, min_size=1, max_size=8), st.sampled_from([0.0, 50.0, 80.0, 95.0]))
 def test_extract_one_prune_is_behavior_identical(term, keys, cutoff):
-    # key_stats enables the bag-bound prune; result must be bit-identical
-    from phenoqc_spark.ontology.fuzzy import build_key_stats
+    # key_stats enables the filter + bag-bound prune; the result must be
+    # bit-identical to the full scan
+    from phenoqc_spark.ontology.fuzzy import build_key_index
 
     keys = tuple(keys)
     assert extract_one(term, keys, cutoff) == extract_one(
-        term, keys, cutoff, key_stats=build_key_stats(keys)
+        term, keys, cutoff, key_stats=build_key_index(keys)
     )
 
 
@@ -178,14 +179,121 @@ def test_key_index_vector_bound_matches_scalar(term, keys, cutoff):
     keys = tuple(keys)
     ki = build_key_index(keys)
     vb = ki.bounds(_str_stats(term))
-    for i, k in enumerate(keys):
-        if not k:
-            assert vb[i] == -1.0
+    assert sorted(ki.kid.tolist()) == list(range(len(keys)))
+    for c, i in enumerate(ki.kid.tolist()):
+        if not keys[i]:
+            assert vb[c] == -1.0
         else:
-            assert abs(vb[i] - _wratio_upper_bound(_str_stats(term), _str_stats(k))) < 1e-9
+            assert abs(vb[c] - _wratio_upper_bound(_str_stats(term), _str_stats(keys[i]))) < 1e-9
     shipped = pickle.loads(pickle.dumps(ki))
     assert shipped.bounds(_str_stats(term)).tolist() == vb.tolist()
     assert extract_one(term, keys, cutoff) == extract_one(term, keys, cutoff, key_stats=ki)
+
+
+def _edge_keys(term, fill):
+    """Keys at WRatio's length-ratio edges around ``term``: exactly 1.5x
+    and 8x its length and one short of each (the term, then ``fill``), the
+    term's prefixes the query is 1.5x and 8x longer than, and its tokens
+    reversed (same characters, most likely no shared token) joined by a
+    space and by ``fill`` (a tab: joiner spaces no original space backs)."""
+    lq = len(term)
+    longer = {3 * lq // 2, 3 * lq // 2 - 1, 8 * lq, 8 * lq - 1}
+    shorter = {-(-2 * lq // 3), 2 * lq // 3, lq // 8, -(-lq // 8)}
+    rev = [t[::-1] for t in reversed(term.split())]
+    return (
+        [(term + fill * L)[:L] for L in sorted(longer) if L > 0]
+        + [term[:L] for L in sorted(shorter) if L > 0]
+        + [" ".join(rev), fill.join(rev)]
+    )
+
+
+# whitespace-only keys, and keys past 255 copies of a character, of spaces
+# and of tokens (the joiner-space count outgrows every character count)
+ws_key_st = st.sampled_from([" ", "\t", "  ", "\xa0 \t"])
+long_key_st = st.sampled_from(
+    ["é" * 256 + " b", "a" + " " * 300 + "b", " ".join(["ab"] * 300), "\t".join(["a"] * 260)]
+)
+
+
+@settings(max_examples=120, deadline=None)
+@given(
+    st.one_of(word_st, odd_key_st.filter(bool)),
+    st.lists(st.one_of(odd_key_st, ws_key_st), min_size=0, max_size=6),
+    st.lists(long_key_st, max_size=2, unique=True),
+    st.sampled_from(["a", "b", "é", " ", "\t"]),
+    st.sampled_from([0.0, 50.0, 80.0, 95.0, 100.0]),
+)
+@example("abc de", [], [], "\t", 95.0)  # a tab-joined key's joiner space
+@example("ab\tcd", [], [], "a", 95.0)  # a tab-joined query's joiner space
+def test_key_index_filter_is_complete(term, keys, long_keys, fill, cutoff):
+    # the integer filter must keep every key whose bound + 1e-6 reaches the
+    # cutoff, so extract_one equals the plain full scan
+    import numpy as np
+
+    from phenoqc_spark.ontology.fuzzy import _str_stats, build_key_index
+
+    keys = tuple(keys + long_keys + _edge_keys(term, fill))
+    ki = build_key_index(keys)
+    q = _str_stats(term)
+    cand = ki.candidates(q, cutoff)
+    assert np.all(np.diff(cand) > 0)
+    need = np.flatnonzero(ki.bounds(q) + 1e-6 >= cutoff)
+    assert set(need.tolist()) <= set(cand.tolist())
+    assert extract_one(term, keys, cutoff, key_stats=ki) == extract_one(term, keys, cutoff)
+
+
+def test_key_index_counts_joiner_spaces_past_255():
+    # 300 two-character tokens joined by tabs and spaces: no character
+    # repeats 256 times, yet the token-sorted join holds 299 spaces.  The
+    # query shares no token (each gains an "x") and scores 81.4 on
+    # token_sort, so a joiner count wrapped at 255 would prune its key
+    from phenoqc_spark.ontology.fuzzy import build_key_index
+
+    toks = [chr(0x4E00 + 2 * i) + chr(0x4E01 + 2 * i) for i in range(300)]
+    key = "".join(t + "\t "[i % 2] for i, t in enumerate(toks))[:-1]
+    term = " ".join(t + "x" for t in toks)
+    keys = (key,)
+    hit = extract_one(term, keys, 80.0)
+    assert hit is not None and hit[0] == key
+    assert extract_one(term, keys, 80.0, key_stats=build_key_index(keys)) == hit
+
+
+def test_key_index_filter_keeps_few_keys_at_dictionary_scale():
+    # 50k phrases of 2-4 random lowercase words: one-letter typos of keys
+    # keep few candidates (a median of <= 1%), never fewer than the bound
+    # needs, and still find a key at least as close as the one they typo
+    import random
+    import string
+
+    import numpy as np
+
+    from phenoqc_spark.ontology.fuzzy import _str_stats, build_key_index
+
+    rng = random.Random(5)
+    letters = string.ascii_lowercase
+    keys = list(
+        dict.fromkeys(
+            " ".join(
+                "".join(rng.choices(letters, k=rng.randint(4, 10)))
+                for _ in range(rng.randint(2, 4))
+            )
+            for _ in range(50_500)
+        )
+    )[:50_000]
+    assert len(keys) == 50_000
+    ki = build_key_index(keys)
+    fracs = []
+    for src in keys[::2_500]:
+        j = rng.randrange(len(src))
+        term = src[:j] + rng.choice(letters) + src[j + 1 :]
+        q = _str_stats(term)
+        cand = ki.candidates(q, 80.0)
+        need = np.flatnonzero(ki.bounds(q) + 1e-6 >= 80.0)
+        assert set(need.tolist()) <= set(cand.tolist())
+        fracs.append(len(cand) / len(keys))
+        hit = extract_one(term, keys, 80.0, key_stats=ki)
+        assert hit is not None and hit[1] >= wratio(term, src)
+    assert sorted(fracs)[len(fracs) // 2] <= 0.01, fracs
 
 
 def test_impute_unknown_strategy_warns(spark):
