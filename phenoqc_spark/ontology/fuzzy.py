@@ -21,7 +21,8 @@ key (in insertion order) achieving the maximum score wins.
 from __future__ import annotations
 
 import itertools
-from functools import lru_cache
+
+import numpy as np
 
 try:  # pragma: no cover - exercised only where rapidfuzz exists
     from rapidfuzz import fuzz as _rf_fuzz
@@ -47,12 +48,9 @@ def _char_masks(pattern: str) -> dict:
     return masks
 
 
-def lcs_length(s1: str, s2: str) -> int:
-    """Length of the longest common subsequence (bit-parallel)."""
-    m = len(s1)
-    if m == 0 or len(s2) == 0:
-        return 0
-    masks = _char_masks(s1)
+def _lcs(masks: dict, m: int, s2: str) -> int:
+    """LCS length of ``s2`` with the m-character pattern whose
+    :func:`_char_masks` are ``masks`` (one bit-parallel pass)."""
     full = (1 << m) - 1
     S = full
     for ch in s2:
@@ -61,6 +59,14 @@ def lcs_length(s1: str, s2: str) -> int:
         S = ((S + u) | (S - u)) & full
     # zeros in S mark matched pattern positions
     return m - bin(S).count("1")
+
+
+def lcs_length(s1: str, s2: str) -> int:
+    """Length of the longest common subsequence (bit-parallel)."""
+    m = len(s1)
+    if m == 0 or len(s2) == 0:
+        return 0
+    return _lcs(_char_masks(s1), m, s2)
 
 
 def indel_distance(s1: str, s2: str) -> int:
@@ -91,16 +97,9 @@ def partial_ratio(s1: str, s2: str) -> float:
         return indel_ratio(s1, s2)
     best = 0.0
     masks = _char_masks(s1)
-    full = (1 << m) - 1
     # score every window with one bit-parallel pass each
     for start in range(0, n - m + 1):
-        S = full
-        window = s2[start : start + m]
-        for ch in window:
-            M = masks.get(ch, 0)
-            u = S & M
-            S = ((S + u) | (S - u)) & full
-        lcs = m - bin(S).count("1")
+        lcs = _lcs(masks, m, s2[start : start + m])
         score = 100.0 * lcs / m  # equal lengths: (2m - 2(m-lcs))/2m
         if score > best:
             best = score
@@ -265,25 +264,26 @@ def _wratio_upper_bound(q, k) -> float:
 
 
 class KeyIndex:
-    """Per-key stats for the character-bag WRatio bound, laid out so a query
-    evaluates the bound only on keys that can still reach the cutoff.
+    """Per-key character counts for the character-bag WRatio bound, laid
+    out so a query evaluates the bound once per bucket of keys and reads
+    it off for the keys that can still reach the cutoff.
 
-    There is one count matrix per WRatio operand variant (original /
-    token-sorted join / unique-token join), stored transposed as
-    ``(chars, keys)`` in the smallest unsigned type that holds the counts,
-    so a query's characters read contiguous rows; a variant whose bags
-    equal the original's for every key shares its array.  Columns are
-    ordered by the keys' variant lengths (l0, l1, l2), so each bucket of
-    keys with equal lengths is one contiguous column range, and ``kid``
-    maps a column back to the key's insertion index.  Lengths are stored
-    in the smallest unsigned type; each bucket also keeps its most
-    unbacked joiner spaces (:meth:`_min_overlap`).  A token→columns index
-    (one offsets and one ids array) serves the token_set 100-shortcut.
+    The count matrix ``m0`` is stored transposed as ``(chars, keys)`` in
+    the smallest unsigned type that holds the counts, so a query's
+    characters read contiguous rows.  Columns are ordered by the keys'
+    lengths (l0 original, l1 token-sorted join, l2 unique-token join) and
+    joiner spaces that the key's own spaces do not back, so each bucket
+    of keys equal in all four is one contiguous column range (``b_off``),
+    and ``kid`` maps a column back to the key's insertion index.  A
+    token→columns index (one offsets and one ids array) finds the keys
+    that share a token with the query.
 
-    :meth:`candidates` is an exact integer filter; :meth:`bounds` then
-    applies :func:`_wratio_upper_bound`'s branch math element-wise, with
-    the same float expressions, to the candidates alone.  It is
-    bit-identical to the scalar bound (tests/test_properties.py), so
+    :meth:`_grid` evaluates :func:`_wratio_upper_bound`'s branch math,
+    with the same float expressions, per bucket and original-bag overlap;
+    :meth:`candidates` reads both its integer filter thresholds and every
+    candidate's bound from that one table.  The table bound is never
+    below the scalar bound, and equals it when query and key are
+    single-spaced and repeat no token (tests/test_properties.py), so
     :func:`extract_one` returns the same (key, score) as a full scan.
 
     ``TermResolver`` builds one per ontology when it is constructed on the
@@ -292,8 +292,6 @@ class KeyIndex:
     """
 
     def __init__(self, keys):
-        import numpy as np
-
         n = len(keys)
         rows = np.arange(n, dtype=np.int64)
         l0 = np.fromiter(map(len, keys), dtype=np.int64, count=n)
@@ -309,54 +307,39 @@ class KeyIndex:
         lut = np.zeros(len(seen), dtype=np.int64)
         lut[chars] = np.arange(C)
         m0 = np.bincount(lut[cps] * n + np.repeat(rows, l0), minlength=C * n).reshape(C, n)
+        m0 = m0.astype(np.min_scalar_type(int(m0.max(initial=0))))
         char_list = [chr(c) for c in chars.tolist()]
         self.char_ix = {ch: j for j, ch in enumerate(char_list)}
+        # keys holding each character: the filter takes rare rows first
+        self.df = np.count_nonzero(m0, axis=1)
         # token-sorted join: str.split() drops every isspace run, and the
         # join puts ntok-1 single spaces back
         toks = [k.split() for k in keys]
         ntok = np.fromiter(map(len, toks), dtype=np.int64, count=n)
         spaces = np.maximum(ntok - 1, 0)
-        # no variant count exceeds the largest original or joiner count
-        top = max(int(m0.max(initial=0)), int(spaces.max(initial=0)))
-        m0 = m0.astype(np.min_scalar_type(top))
-        # keys holding each character: the filter takes rare rows first
-        self.df = np.count_nonzero(m0, axis=1)
         ws = np.array([ch.isspace() for ch in char_list], dtype=bool)
-        sp = self.char_ix[" "]
-        m1 = m0.copy()
-        m1[ws] = 0
-        m1[sp] = spaces
         l1 = l0 - m0[ws].sum(axis=0, dtype=np.int64) + spaces
-        if np.array_equal(m1, m0):
-            m1 = m0
-        # token→keys, deduplicated per key; a key with fewer distinct
-        # tokens than tokens gets its own unique-token join bag
+        # joiner spaces that the key's own spaces do not back
+        gap = np.maximum(spaces - m0[self.char_ix[" "]], 0)
+        # token→keys, deduplicated per key
         flat = list(itertools.chain.from_iterable(toks))
         tok_id = dict(zip(dict.fromkeys(flat), itertools.count()))
         tids = np.fromiter(map(tok_id.__getitem__, flat), dtype=np.int64, count=len(flat))
         pairs = np.unique(tids * n + np.repeat(rows, ntok))
         ptok, pkey = np.divmod(pairs, n)
-        m2, l2 = m1, l1
-        repeats = (np.bincount(pkey, minlength=n) < ntok).nonzero()[0]
-        if len(repeats):
-            m2, l2 = m1.copy(), l1.copy()
-            for i in repeats.tolist():
-                ku = " ".join(sorted(set(toks[i])))
-                m2[:, i] = 0
-                for ch, cnt in _bag(ku).items():
-                    m2[self.char_ix[ch], i] = cnt
-                l2[i] = len(ku)
-        # joiner spaces that the key's own spaces do not back
-        gap = np.maximum(spaces - m0[sp], 0)
-        # lay the columns out by (l0, l1, l2), so each bucket of keys
-        # with equal variant lengths is one contiguous range
-        kid = np.lexsort((l2, l1, l0))
+        # unique-token join: the key's distinct tokens and one joiner
+        # space fewer than them
+        tlen = np.fromiter(map(len, tok_id), dtype=np.int64, count=len(tok_id))
+        nuniq = np.bincount(pkey, minlength=n)
+        l2 = np.bincount(pkey, weights=tlen[ptok], minlength=n).astype(np.int64)
+        l2 += np.maximum(nuniq - 1, 0)
+        # lay the columns out by (l0, l1, l2, gap), so each bucket of keys
+        # equal in all four is one contiguous range
+        kid = np.lexsort((gap, l2, l1, l0))
         col = np.empty(n, dtype=np.int64)
         col[kid] = rows
         self.kid = kid.astype(np.int32)
         self.m0 = m0.take(kid, axis=1)
-        self.m1 = self.m0 if m1 is m0 else m1.take(kid, axis=1)
-        self.m2 = self.m1 if m2 is m1 else m2.take(kid, axis=1)
         l0, l1, l2, gap = (x[kid] for x in (l0, l1, l2, gap))
         self.tok_id = tok_id
         self.tok_off = np.concatenate(
@@ -366,33 +349,29 @@ class KeyIndex:
         # buckets of the non-empty keys (empty keys sort first)
         ne = int(np.searchsorted(l0, 1))
         starts = ne + np.flatnonzero(
-            np.diff(l0[ne:], prepend=0) | np.diff(l1[ne:], prepend=-1) | np.diff(l2[ne:], prepend=-1)
+            np.diff(l0[ne:], prepend=0)
+            | np.diff(l1[ne:], prepend=-1)
+            | np.diff(l2[ne:], prepend=-1)
+            | np.diff(gap[ne:], prepend=-1)
         )
         self.b_off = np.append(starts, n)
-        self.b_len, self.b_l1, self.b_l2 = l0[starts], l1[starts], l2[starts]
-        self.b_gap = np.maximum.reduceat(gap, starts)
-        lt = np.min_scalar_type(int(l0.max(initial=0)))
-        self.l0, self.l1, self.l2 = (x.astype(lt) for x in (l0, l1, l2))
+        self.b_len, self.b_l1, self.b_l2, self.b_gap = (
+            x[starts] for x in (l0, l1, l2, gap)
+        )
 
-    def _common(self, mat, bag, cols=None):
-        """Bag overlap of ``bag`` with the columns ``cols`` of ``mat``
-        (every column by default)."""
-        import numpy as np
-
-        top = np.iinfo(mat.dtype).max
-        out = np.zeros(mat.shape[1] if cols is None else len(cols), dtype=np.int64)
+    def _common(self, bag, cols):
+        """Original-bag overlap of ``bag`` with the keys in columns ``cols``."""
+        top = np.iinfo(self.m0.dtype).max
+        out = np.zeros(len(cols), dtype=np.int64)
         for ch, cnt in bag.items():
             j = self.char_ix.get(ch)
             if j is not None:
-                row = mat[j] if cols is None else mat[j].take(cols)
                 # clipping at the type's top cannot change min(count, key count)
-                out += row.clip(0, min(cnt, top))
+                out += self.m0[j].take(cols).clip(0, min(cnt, top))
         return out
 
     def _sharing(self, tq):
         """Columns of the keys that share a token with the query."""
-        import numpy as np
-
         off, parts = self.tok_off, []
         for t in tq:
             j = self.tok_id.get(t)
@@ -400,118 +379,30 @@ class KeyIndex:
                 parts.append(self.tok_cols[off[j] : off[j + 1]])
         return np.concatenate(parts) if parts else np.zeros(0, dtype=np.int32)
 
-    def _min_overlap(self, qstat, cutoff):
-        """Per bucket, the least original-bag overlap c0 with which a key
-        that shares no token with the query can have bound + 1e-6 ≥
-        ``cutoff``; min(lq, l0) + 1 when none can.
+    def _grid(self, qstat):
+        """:func:`_wratio_upper_bound` per bucket (rows) and original-bag
+        overlap c0 = 0..lq (columns), in two planes: keys that share no
+        token with the query, then keys that share one.
 
         The token-sorted joins drop whitespace and put ntok−1 spaces back,
         so c1 = c0 − (whitespace overlap) + min(joiner spaces), which is at
-        most c0 + min(dq, max(gq, gk)): dq is the query's joiner spaces,
-        and gq, gk the joiner spaces that a string's own spaces do not back
-        (0 for single-spaced text).  A unique-token bag is pointwise no
-        larger than a sorted one, so c2 ≤ c1.  Every branch of the bound
-        grows with the overlaps, so it is evaluated, with :meth:`bounds`'
-        own float expressions, at c0 = 0..lq with each bucket's lengths
-        and its most unbacked joiner spaces; the result is monotone in c0.
+        most e(c0) = c0 + min(dq, max(gq, gk)): dq is the query's joiner
+        spaces, and gq, gk the joiner spaces that a string's own spaces do
+        not back (0 for single-spaced text).  A unique-token bag is
+        pointwise no larger than a sorted one, so c2 ≤ c1.  Every branch
+        of the bound grows with the overlaps, so plane 0 evaluates it at
+        c1 = c2 = e(c0): never below the scalar bound, equal to it when
+        both strings are single-spaced and repeat no token, and monotone
+        in c0.  For a token-sharing key token_set and partial_token are
+        100, and the bound reads c0 alone, so plane 1 is exact.
         """
-        import numpy as np
-
         (lq, tq, bq, lsq, bsq, luq, buq) = qstat
-        L = self.b_len[:, None]
-        c = np.arange(lq + 1)[None, :]
+        c0 = np.arange(lq + 1)
+        l0, l1, l2 = (x[:, None] for x in (self.b_len, self.b_l1, self.b_l2))
         dq = bsq.get(" ", 0)
         gq = max(dq - bq.get(" ", 0), 0)
-        e = c + np.minimum(dq, np.maximum(gq, self.b_gap))[:, None]
-        r = 200.0 * c / (lq + L)
-        lo = np.minimum(lq, L)
-        hi = np.maximum(lq, L)
-        # branch 1: hi < 1.5*lo
-        ts_sort = 200.0 * e / np.maximum(lsq + self.b_l1, 1)[:, None]
-        uniq = 200.0 * e / np.maximum(luq + self.b_l2, 1)[:, None]
-        b1 = np.maximum(r, 0.95 * np.maximum(ts_sort, uniq))
-        # branch 2
-        sc = np.where(hi < 8 * lo, 0.9, 0.6)
-        pr = 100.0 * np.minimum(c, lo) / lo
-        ms = np.maximum(np.minimum(lsq, self.b_l1), 1)[:, None]
-        mu = np.maximum(np.minimum(luq, self.b_l2), 1)[:, None]
-        pt = np.maximum(100.0 * np.minimum(e, ms) / ms, 100.0 * np.minimum(e, mu) / mu)
-        b2 = np.maximum(r, np.maximum(sc * pr, 0.95 * sc * pt))
-        ok = np.where(hi < 1.5 * lo, b1, b2) + 1e-6 >= cutoff
-        return np.where(ok.any(axis=1), ok.argmax(axis=1), lo[:, 0] + 1)
-
-    def candidates(self, qstat, cutoff):
-        """Columns, ascending, of a superset of the keys whose bound + 1e-6
-        reaches ``cutoff``, found with integer tests only.
-
-        A key that shares a token with the query always stays (token
-        index).  Any other key needs its bucket's overlap c0 ≥ t
-        (:meth:`_min_overlap`): it may miss at most lq − t of the query's
-        character occurrences.  A query character that no key holds is a
-        miss for every key.  The others are taken rarest first (fewest
-        keys), and each drops the keys whose misses so far exceed that
-        slack: over every column while most survive, then over the
-        survivors only.  A key that survives every character has c0 ≥ t.
-        """
-        import numpy as np
-
-        lq, bq = qstat[0], qstat[2]
-        ix, df = self.char_ix, self.df
-        top = np.iinfo(self.m0.dtype).max
-        absent = sum(n for ch, n in bq.items() if ch not in ix)
-        rows = sorted((df[ix[ch]], ix[ch], n) for ch, n in bq.items() if ch in ix)
-        # acc: a column's slack plus its overlap so far, |acc| ≤ 2·lq + 1;
-        # a column is dropped once acc < the occurrences taken so far.
-        # Dense over every non-empty column until few survive, then gathered.
-        a = int(self.b_off[0])
-        slack = lq - absent - self._min_overlap(qstat, cutoff)
-        acc_t = np.promote_types(np.int16, np.min_scalar_type(-2 * lq - 1))
-        acc = np.repeat(slack, np.diff(self.b_off)).astype(acc_t)
-        taken, cols = 0, None
-        for _, j, n in rows:
-            have = self.m0[j, a:] if cols is None else self.m0[j].take(cols)
-            acc += have.clip(0, min(n, top))
-            taken += n
-            ok = acc >= taken
-            if cols is not None:
-                cols, acc = cols[ok], acc[ok]
-                if not len(cols):
-                    break
-            elif 4 * np.count_nonzero(ok) < len(ok):
-                cols = np.flatnonzero(ok)
-                acc = acc[cols]
-                cols += a
-        if cols is None:
-            cols = np.flatnonzero(acc >= taken) + a
-        return np.union1d(cols, self._sharing(qstat[1]))
-
-    def bounds(self, qstat, cols=None):
-        """:func:`_wratio_upper_bound` for the keys in columns ``cols``
-        (every column by default), −1 for empty keys — the same branch
-        math, element-wise."""
-        import numpy as np
-
-        (lq, tq, bq, lsq, bsq, luq, buq) = qstat
-        sel = slice(None) if cols is None else cols
-        done = []  # (matrix, bag, overlap): variants often share both
-
-        def common(mat, bag):
-            for m, b, c in done:
-                if m is mat and b == bag:
-                    return c
-            c = self._common(mat, bag, cols)
-            done.append((mat, bag, c))
-            return c
-
-        c0 = common(self.m0, bq)
-        c1 = common(self.m1, bsq)
-        c2 = common(self.m2, buq)
-        l0, l1, l2 = (x[sel].astype(np.int64) for x in (self.l0, self.l1, self.l2))
-        valid = l0 > 0
-        l0 = np.maximum(l0, 1)  # keeps the masked-out math finite
-        shared = np.zeros(len(self.kid), dtype=bool)
-        shared[self._sharing(tq)] = True
-        shared = shared[sel]
+        c1 = c2 = c0 + np.minimum(dq, np.maximum(gq, self.b_gap))[:, None]
+        shared = np.array([False, True])[:, None, None]
         r = 200.0 * c0 / (lq + l0)
         lo = np.minimum(lq, l0)
         hi = np.maximum(lq, l0)
@@ -534,8 +425,66 @@ class KeyIndex:
         pt_u = np.where(mu > 0, 100.0 * np.minimum(c2, mu) / np.maximum(mu, 1), 0.0)
         pt = np.where(shared, 100.0, np.maximum(pt_s, pt_u))
         b2 = np.maximum(r, np.maximum(sc * pr, 0.95 * sc * pt))
-        out = np.where(hi < 1.5 * lo, b1, b2)
-        return np.where(valid, out, -1.0)
+        return np.where(hi < 1.5 * lo, b1, b2)
+
+    def candidates(self, qstat, cutoff):
+        """``(cols, ubs)``: columns, ascending, of a superset of the keys
+        whose bound + 1e-6 reaches ``cutoff``, and each one's bound read
+        from :meth:`_grid`.
+
+        A key that shares no token with the query needs c0 ≥ t, its
+        bucket's first overlap whose plane-0 bound + 1e-6 reaches the
+        cutoff: it may miss at most lq − t of the query's character
+        occurrences.  A query character that no key holds is a miss for
+        every key.  The others are taken rarest first (fewest keys), and
+        each drops the keys whose misses so far exceed that slack: over
+        every column while most survive, then over the survivors only.  A
+        survivor's accumulator is its slack plus its exact c0, and plane 0
+        at c0 is its bound.  A key that shares a token with the query
+        (token index) always stays, with plane 1's bound at its c0.
+        """
+        lq, tq, bq = qstat[:3]
+        ix, df = self.char_ix, self.df
+        top = np.iinfo(self.m0.dtype).max
+        absent = sum(n for ch, n in bq.items() if ch not in ix)
+        rows = sorted((df[ix[ch]], ix[ch], n) for ch, n in bq.items() if ch in ix)
+        grid = self._grid(qstat)
+        ok = grid[0] + 1e-6 >= cutoff
+        # no key can hold more than min(lq, l0) of the query's characters
+        t = np.where(ok.any(axis=1), ok.argmax(axis=1), np.minimum(lq, self.b_len) + 1)
+        # acc: a column's slack plus its overlap so far, |acc| ≤ 2·lq + 1;
+        # a column is dropped once acc < the occurrences taken so far.
+        # Dense over every non-empty column until few survive, then gathered.
+        a = int(self.b_off[0])
+        slack = lq - absent - t
+        acc_t = np.promote_types(np.int16, np.min_scalar_type(-2 * lq - 1))
+        acc = np.repeat(slack, np.diff(self.b_off)).astype(acc_t)
+        taken, cols = 0, None
+        for _, j, n in rows:
+            have = self.m0[j, a:] if cols is None else self.m0[j].take(cols)
+            acc += have.clip(0, min(n, top))
+            taken += n
+            ok = acc >= taken
+            if cols is not None:
+                cols, acc = cols[ok], acc[ok]
+                if not len(cols):
+                    break
+            elif 4 * np.count_nonzero(ok) < len(ok):
+                cols = np.flatnonzero(ok)
+                acc = acc[cols]
+                cols += a
+        if cols is None:
+            ok = acc >= taken
+            cols, acc = np.flatnonzero(ok) + a, acc[ok]
+        b = np.searchsorted(self.b_off, cols, side="right") - 1
+        ubs = grid[0, b, acc - slack[b]]
+        sh = self._sharing(tq)
+        if not len(sh):
+            return cols, ubs
+        # a sharing key's plane-1 bound replaces any plane-0 one
+        b = np.searchsorted(self.b_off, sh, side="right") - 1
+        cols, first = np.unique(np.concatenate((sh, cols)), return_index=True)
+        return cols, np.concatenate((grid[1, b, self._common(bq, sh)], ubs))[first]
 
 
 def build_key_index(keys) -> KeyIndex:
@@ -554,9 +503,9 @@ def extract_one(query: str, keys, score_cutoff: float, key_stats=None):
     Without ``key_stats`` this is the plain WRatio scan over every key.
     ``key_stats`` (a :class:`KeyIndex` from :func:`build_key_index`)
     prunes it: :meth:`KeyIndex.candidates` filters the keys with integer
-    tests, the character-bag bound is evaluated on the candidates alone,
-    and WRatio runs, in insertion order, only on keys whose bound can
-    still reach max(cutoff, best).  At HPO dictionary scale (50k keys) a
+    tests and reads each candidate's character-bag bound from one
+    per-query table, and WRatio runs, in insertion order, only on keys
+    whose bound can still reach max(cutoff, best).  At HPO dictionary scale (50k keys) a
     distinct unmatched surface pays a handful of WRatio evaluations.  The
     prune only skips keys that provably cannot win, so the returned
     (key, score) is bit-identical to the full scan.  The rapidfuzz path
@@ -577,10 +526,10 @@ def extract_one(query: str, keys, score_cutoff: float, key_stats=None):
         # the keys whose bound reaches the cutoff, in insertion order —
         # identical tie-break, identical result
         qstat = _str_stats(query)
-        cols = key_stats.candidates(qstat, score_cutoff)
+        cols, ubs = key_stats.candidates(qstat, score_cutoff)
         if not len(cols):
             return None
-        ubs = key_stats.bounds(qstat, cols) + 1e-6
+        ubs = ubs + 1e-6
         keep = ubs >= score_cutoff
         ids, ubs = key_stats.kid[cols[keep]], ubs[keep]
         order = ids.argsort()

@@ -198,7 +198,9 @@ class TermResolver:
                     if PREFIX_ALIASES.get(pref) == onto:
                         pid = None
                         if onto == "HPO":
-                            pid = f"HP:{int(core):07d}" if core.isdigit() else f"HP:{core}"
+                            # isdecimal: exactly the digits int() accepts
+                            # (isdigit also holds for e.g. U+1369 ፩)
+                            pid = f"HP:{int(core):07d}" if core.isdecimal() else f"HP:{core}"
                         elif onto == "DO":
                             pid = f"DOID:{core}"
                         elif onto == "MPO":

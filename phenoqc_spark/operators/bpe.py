@@ -30,6 +30,9 @@ from pyspark.sql import DataFrame, functions as F
 
 __all__ = ["bpe_train", "bpe_pair_counts", "apply_merges"]
 
+# merges between localCheckpoints of the vocab frame (lineage truncation)
+_CHECKPOINT_EVERY = 5
+
 
 def _word_vocab(df: DataFrame, text_col: str) -> DataFrame:
     """(word, cnt) distinct lowercase whitespace words with corpus counts
@@ -91,7 +94,6 @@ def bpe_train(
     df: DataFrame,
     text_col: str = "text",
     n_merges: int = 20,
-    checkpoint_every: int = 5,
 ):
     """Train ``n_merges`` BPE merges over the corpus.
 
@@ -119,6 +121,6 @@ def bpe_train(
         vocab = vocab.withColumn(
             "syms", F.replace(F.col("syms"), F.lit(f" {a} {b} "), F.lit(f" {a}{b} "))
         )
-        if (step + 1) % checkpoint_every == 0:
+        if (step + 1) % _CHECKPOINT_EVERY == 0:
             vocab = vocab.localCheckpoint(eager=True)
     return merges, vocab

@@ -22,6 +22,33 @@ from pyspark.sql import DataFrame, SparkSession
 from ..pipeline import build_triples, extract_records
 
 
+def _start(stream: DataFrame, process_batch, checkpoint_path: str, trigger_once: bool):
+    """Start ``stream`` through ``foreachBatch(process_batch)`` with its
+    checkpoint at ``checkpoint_path``; ``trigger_once`` processes all
+    available input then stops.  Returns the StreamingQuery."""
+    writer = stream.writeStream.foreachBatch(process_batch).option(
+        "checkpointLocation", checkpoint_path
+    )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _write_partition(df: DataFrame, batch_id: int, path: str) -> None:
+    """Write ``df`` as the ``batch_id`` partition of the parquet table at
+    ``path`` with dynamic partition overwrite, so a replayed batch
+    replaces its own partition instead of appending twice."""
+    from pyspark.sql import functions as F
+
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
 def stream_triples(
     spark: SparkSession,
     pages_stream: DataFrame,
@@ -41,13 +68,7 @@ def stream_triples(
         trip, _ = build_triples(extract_records(batch_df), resolver_bc)
         trip.write.mode("append").parquet(output_path)
 
-    writer = (
-        pages_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(pages_stream, process_batch, checkpoint_path, trigger_once)
 
 
 def sessionized_page_counts(
@@ -191,15 +212,6 @@ def stream_near_dedup_docs(
 
     from ..operators.dedup import minhash_doc_sets, minhash_near_dedup_incremental
 
-    def _write_partition(df: DataFrame, batch_id: int, path: str) -> None:
-        (
-            df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()
         try:
@@ -231,12 +243,7 @@ def stream_near_dedup_docs(
         finally:
             batch_df.unpersist()
 
-    writer = docs_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs_stream, process_batch, checkpoint_path, trigger_once)
 
 
 def stream_dedup_docs(
@@ -295,13 +302,7 @@ def stream_merge_triples(
 
     from ..operators.resume import merge_state_into as merge_state_into_fn
 
-    writer = (
-        triples_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(triples_stream, process_batch, checkpoint_path, trigger_once)
 
 
 def stream_cardinality_state(
@@ -328,26 +329,12 @@ def stream_cardinality_state(
     :func:`~phenoqc_spark.operators.sketches.merge_cardinality_sketches`
     pass is a lossless compaction (same read-time semantics).
     """
-    from pyspark.sql import functions as F
-
     from ..operators.sketches import cardinality_sketches
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            cardinality_sketches(batch_df, key_cols, value_col, lgk)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_path)
-        )
+        _write_partition(cardinality_sketches(batch_df, key_cols, value_col, lgk), batch_id, state_path)
 
-    writer = df_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(df_stream, process_batch, checkpoint_path, trigger_once)
 
 
 def read_cardinality_estimates(spark: SparkSession, state_path: str) -> DataFrame:
@@ -382,26 +369,12 @@ def stream_cms_state(
     — the same merge-at-read contract as
     :func:`stream_cardinality_state` (CMS is a linear projection, so
     cell addition is associative under any merge tree)."""
-    from pyspark.sql import functions as F
-
     from ..operators.sketches import cms_state
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            cms_state(batch_df, key_cols, token_col, w, d)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_path)
-        )
+        _write_partition(cms_state(batch_df, key_cols, token_col, w, d), batch_id, state_path)
 
-    writer = df_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(df_stream, process_batch, checkpoint_path, trigger_once)
 
 
 def read_cms_estimates(
@@ -440,26 +413,12 @@ def stream_histogram_state(
     overwrites its partition and exactly-once holds with no ledger —
     the same merge-at-read contract as :func:`stream_cardinality_state`
     (bin-count addition is associative)."""
-    from pyspark.sql import functions as F
-
     from ..operators.sketches import histogram_sketches
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            histogram_sketches(batch_df, key_cols, value_col, lo, hi, n_bins)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(state_path)
-        )
+        _write_partition(histogram_sketches(batch_df, key_cols, value_col, lo, hi, n_bins), batch_id, state_path)
 
-    writer = df_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(df_stream, process_batch, checkpoint_path, trigger_once)
 
 
 def read_histogram_quantiles(

@@ -97,6 +97,14 @@ def test_id_variants(resolver):
     assert resolver.map_term("DO 1612")["DO"] == "DOID:1612"
 
 
+def test_prefix_tier_pads_only_decimal_digits(resolver):
+    # "፩" (U+1369) is a \w digit that int() rejects: it maps verbatim
+    # instead of failing the link task
+    assert resolver.map_term_detailed("hp ፩")["HPO"] == ("HP:፩", "prefix", 100.0)
+    assert resolver.map_term("hp 0001250")["HPO"] == "HP:0001250"
+    assert resolver.map_term("hp ٣")["HPO"] == "HP:0000003"
+
+
 def test_normalization_and_noise(resolver):
     res = resolver.map_term("  High\n blood\tpressure (HP:0000822)  ")
     assert res["HPO"] == "HP:0000822"

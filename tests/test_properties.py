@@ -164,10 +164,12 @@ odd_key_st = st.one_of(
     st.sampled_from([0.0, 50.0, 80.0, 95.0]),
 )
 def test_key_index_vector_bound_matches_scalar(term, keys, cutoff):
-    # the numpy-batched bound must equal the scalar bound per key (so the
-    # vectorized prune inherits the scalar soundness proof), also after a
-    # pickle round trip (the index rides the resolver broadcast), and the
-    # pruned extract_one must be bit-identical to the unpruned one
+    # every candidate's table bound must be at least its scalar bound (so
+    # the prune inherits the scalar soundness proof) and equal to it when
+    # query and key are single-spaced and repeat no token, also after a
+    # pickle round trip (the index rides the resolver broadcast); at
+    # cutoff 0 every non-empty key is a candidate.  The pruned
+    # extract_one must be bit-identical to the unpruned one
     import pickle
 
     from phenoqc_spark.ontology.fuzzy import (
@@ -176,18 +178,54 @@ def test_key_index_vector_bound_matches_scalar(term, keys, cutoff):
         build_key_index,
     )
 
+    def plain(s):
+        toks = s.split()
+        return s == " ".join(toks) and len(set(toks)) == len(toks)
+
     keys = tuple(keys)
     ki = build_key_index(keys)
-    vb = ki.bounds(_str_stats(term))
+    q = _str_stats(term)
     assert sorted(ki.kid.tolist()) == list(range(len(keys)))
-    for c, i in enumerate(ki.kid.tolist()):
-        if not keys[i]:
-            assert vb[c] == -1.0
-        else:
-            assert abs(vb[c] - _wratio_upper_bound(_str_stats(term), _str_stats(keys[i]))) < 1e-9
     shipped = pickle.loads(pickle.dumps(ki))
-    assert shipped.bounds(_str_stats(term)).tolist() == vb.tolist()
+    for cut in sorted({0.0, cutoff}):
+        cols, ubs = ki.candidates(q, cut)
+        ids = ki.kid[cols].tolist()
+        if cut == 0.0:
+            assert sorted(ids) == [i for i, k in enumerate(keys) if k]
+        for i, ub in zip(ids, ubs.tolist()):
+            ref = _wratio_upper_bound(q, _str_stats(keys[i]))
+            assert ub >= ref - 1e-9
+            if plain(term) and plain(keys[i]):
+                assert abs(ub - ref) < 1e-9
+        got = shipped.candidates(q, cut)
+        assert got[0].tolist() == cols.tolist() and got[1].tolist() == ubs.tolist()
     assert extract_one(term, keys, cutoff) == extract_one(term, keys, cutoff, key_stats=ki)
+
+
+def test_key_index_bounds_token_sharing_keys_at_partial_scale():
+    # keys that share the token "ab" with the query and are >= 8x its
+    # length fall in WRatio's 0.6 partial branch, where the exact bound
+    # is max(r, 0.6·pr, 0.57·100) = 60: the token index keeps both keys,
+    # their bound cuts them at cutoff 80 and admits them at 50, where
+    # both score 60 and the first in insertion order wins
+    from phenoqc_spark.ontology.fuzzy import (
+        _str_stats,
+        _wratio_upper_bound,
+        build_key_index,
+    )
+
+    term = "ab"
+    keys = ("ab cdefghijklmnop", "xy ab qrstuvwxyzab")
+    ki = build_key_index(keys)
+    q = _str_stats(term)
+    cols, ubs = ki.candidates(q, 80.0)
+    assert sorted(ki.kid[cols].tolist()) == [0, 1]
+    for i, ub in zip(ki.kid[cols].tolist(), ubs.tolist()):
+        assert abs(ub - _wratio_upper_bound(q, _str_stats(keys[i]))) < 1e-9
+    assert ubs.max() < 80.0
+    assert extract_one(term, keys, 80.0, key_stats=ki) is None
+    assert extract_one(term, keys, 50.0, key_stats=ki) == extract_one(term, keys, 50.0)
+    assert extract_one(term, keys, 50.0) == ("ab cdefghijklmnop", 60.0)
 
 
 def _edge_keys(term, fill):
@@ -226,19 +264,27 @@ long_key_st = st.sampled_from(
 @example("abc de", [], [], "\t", 95.0)  # a tab-joined key's joiner space
 @example("ab\tcd", [], [], "a", 95.0)  # a tab-joined query's joiner space
 def test_key_index_filter_is_complete(term, keys, long_keys, fill, cutoff):
-    # the integer filter must keep every key whose bound + 1e-6 reaches the
-    # cutoff, so extract_one equals the plain full scan
+    # the integer filter must keep every key whose scalar bound + 1e-6
+    # reaches the cutoff, so extract_one equals the plain full scan
     import numpy as np
 
-    from phenoqc_spark.ontology.fuzzy import _str_stats, build_key_index
+    from phenoqc_spark.ontology.fuzzy import (
+        _str_stats,
+        _wratio_upper_bound,
+        build_key_index,
+    )
 
     keys = tuple(keys + long_keys + _edge_keys(term, fill))
     ki = build_key_index(keys)
     q = _str_stats(term)
-    cand = ki.candidates(q, cutoff)
+    cand, _ = ki.candidates(q, cutoff)
     assert np.all(np.diff(cand) > 0)
-    need = np.flatnonzero(ki.bounds(q) + 1e-6 >= cutoff)
-    assert set(need.tolist()) <= set(cand.tolist())
+    need = {
+        i
+        for i, k in enumerate(keys)
+        if k and _wratio_upper_bound(q, _str_stats(k)) + 1e-6 >= cutoff
+    }
+    assert need <= set(ki.kid[cand].tolist())
     assert extract_one(term, keys, cutoff, key_stats=ki) == extract_one(term, keys, cutoff)
 
 
@@ -267,7 +313,11 @@ def test_key_index_filter_keeps_few_keys_at_dictionary_scale():
 
     import numpy as np
 
-    from phenoqc_spark.ontology.fuzzy import _str_stats, build_key_index
+    from phenoqc_spark.ontology.fuzzy import (
+        _str_stats,
+        _wratio_upper_bound,
+        build_key_index,
+    )
 
     rng = random.Random(5)
     letters = string.ascii_lowercase
@@ -282,14 +332,15 @@ def test_key_index_filter_keeps_few_keys_at_dictionary_scale():
     )[:50_000]
     assert len(keys) == 50_000
     ki = build_key_index(keys)
+    stats = [_str_stats(k) for k in keys]
     fracs = []
     for src in keys[::2_500]:
         j = rng.randrange(len(src))
         term = src[:j] + rng.choice(letters) + src[j + 1 :]
         q = _str_stats(term)
-        cand = ki.candidates(q, 80.0)
-        need = np.flatnonzero(ki.bounds(q) + 1e-6 >= 80.0)
-        assert set(need.tolist()) <= set(cand.tolist())
+        cand, _ = ki.candidates(q, 80.0)
+        need = [i for i, k in enumerate(stats) if _wratio_upper_bound(q, k) + 1e-6 >= 80.0]
+        assert set(need) <= set(ki.kid[cand].tolist())
         fracs.append(len(cand) / len(keys))
         hit = extract_one(term, keys, 80.0, key_stats=ki)
         assert hit is not None and hit[1] >= wratio(term, src)
